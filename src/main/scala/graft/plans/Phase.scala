@@ -13,9 +13,9 @@ import graft.functions.ColumnDef
   * step-by-step full materialization (phase.py:88-128) is replaced by plan
   * composition, which is the main scale win.
   *
-  * apply() returns the frame WITH internal columns (row numbers + event
-  * channel); [[Pipeline]] handles policy application, checkpointing, and
-  * stripping internals.
+  * apply() returns the frame WITH internal columns (row numbers, event
+  * channel and status bits); [[Pipeline]] handles policy application,
+  * checkpointing, and stripping internals.
   */
 final case class Phase(
     name: String,
@@ -49,27 +49,12 @@ final case class Phase(
     val renamed = renameColumns(df, ctx)
     val defaultPolicy = errorPolicy.getOrElse(ctx.errorPolicy)
     checkRequired(renamed, ctx, defaultPolicy)
-    val casted0 = castColumns(renamed, defaultPolicy)
     // rows dropped by per-column DropRow policies are removed BEFORE steps
     // run (reference: DropRowException removes the row inside the column
     // pass, phase.py:101-105, so check_unique/batch steps never see it);
-    // their events are tracked lazily and drained at the phase boundary.
-    // Applied ONLY when a column can actually fire DropRow: the filter
-    // predicate embeds the whole validation expression tree, and paying
-    // that duplication on every phase would tax the common no-drop case.
-    val canDrop = columns.exists(c =>
-      c.onErrorOpt.getOrElse(defaultPolicy) == ErrorPolicy.DropRow)
-    val casted = if (!canDrop) casted0 else {
-      val dropped = Events.rowDropped(casted0(Events.EventsCol))
-      ctx.registerDroppedEvents(name,
-        casted0.filter(dropped)
-          .select(col(Events.RowNumCol).as("row_num"),
-            explode(col(Events.EventsCol)).as("e"))
-          .filter(col("e.etype") === Events.DroppedType)
-          .select(col("row_num"), col("e.etype").as("etype"),
-            col("e.step").as("step"), col("e.message").as("message")))
-      casted0.filter(!dropped)
-    }
+    // their events are tracked lazily and drained at the phase boundary
+    val (casted, dropped) = castColumns(renamed, defaultPolicy)
+    dropped.foreach(ctx.registerDroppedEvents(name, _))
     val stepped = steps.foldLeft(casted)((d, s) => s(d, ctx, name))
     val renumbered = if (renumber) RowNum.renumber(stepped) else stepped
     prepareForSave(renumbered, ctx)
@@ -137,17 +122,26 @@ final case class Phase(
     * not modified by later ones (first-error-wins, as in the reference
     * where the row step aborts on first raise).
     *
-    * Compiled as ONE projection over the input attributes: the events
-    * column becomes `concat(events, term_1, ..., term_m)` (one conditional
-    * singleton per check) and the "failed by an earlier column" guard is a
-    * cumulative OR over the earlier columns' raw check predicates. A
-    * per-column fold that guards on the accumulated events array references
-    * the previous layer ~3x; after Catalyst's project-collapse inlines the
-    * shared references the tree is ~3^k in the number of columns — hundreds
-    * of copies at 5 columns, codegen falls over, evaluation goes
-    * interpreted (round-1 driver bench: 179s for this query alone). */
+    * Compiled as two projections, linear in the number of checks. The
+    * lower one computes `fail_at`, the 1-based index of the first declared
+    * column whose non-Warn checks fire: -1 when the row arrived dropped, 0
+    * when it arrived failed, n+1 when nothing fires. It is one CASE chain
+    * that references each failing check once. The upper one guards on it:
+    * column k keeps its old value when `fail_at < k` and emits its events
+    * when `fail_at >= k`; the events column becomes
+    * `concat(events, term_1, ..., term_m)` (one conditional singleton per
+    * check) and the status bits follow from `fail_at` and the failing
+    * column's policy. Guarding on the accumulated events instead repeats
+    * every earlier column's checks in each later column's guard, and
+    * Catalyst's project-collapse and predicate pushdown copy that tree
+    * into every consumer until codegen gives up.
+    *
+    * When a column can fire DropRow (or a row arrived dropped) the rows
+    * with `fail_at` in {-1, DropRow columns} are filtered out here, and the
+    * second result is the lazy frame of their DROPPED_ROW events, built
+    * from the lower projection and the DropRow columns' terms only. */
   private[plans] def castColumns(df: DataFrame,
-      defaultPolicy: ErrorPolicy = ErrorPolicy.Collect): DataFrame = {
+      defaultPolicy: ErrorPolicy = ErrorPolicy.Collect): (DataFrame, Option[DataFrame]) = {
     val applicable = columns.flatMap { cdef =>
       val present = df.columns.contains(cdef.name)
       if (!(cdef.required || cdef.save || present)) None
@@ -163,24 +157,60 @@ final case class Phase(
         Some((cdef, oldVal,
           cdef.compileChecks(raw, s"cast_and_check:${cdef.name}", defaultPolicy)))
       }
-    }
-    if (applicable.isEmpty) df
-    else {
-      val e0 = df(Events.EventsCol)
-      var failedBefore: org.apache.spark.sql.Column = Events.rowFailed(e0)
-      val values = Map.newBuilder[String, org.apache.spark.sql.Column]
-      val terms = Seq.newBuilder[org.apache.spark.sql.Column]
-      applicable.foreach { case (cdef, oldVal, cc) =>
-        val gate = !failedBefore
-        values += cdef.name -> when(failedBefore, oldVal).otherwise(cc.value)
-        cc.checks.foreach { case (cond, msg) =>
-          terms += Events.appendTerm(gate && coalesce(cond, lit(false)),
-            cc.etype, s"cast_and_check:${cdef.name}", msg, cc.policy)
-        }
-        failedBefore = failedBefore || cc.fails
+    }.zipWithIndex.map { case ((cdef, oldVal, cc), i) => (i + 1, cdef, oldVal, cc) }
+    // a row that arrives dropped must leave the phase here as well
+    val canDrop = columns.exists(c =>
+      c.onErrorOpt.getOrElse(defaultPolicy) == ErrorPolicy.DropRow)
+    if (applicable.isEmpty && !canDrop) return (df, None)
+
+    val FailAtCol = "__graft_fail_at__"
+    val status = df(Events.StatusCol)
+    val failAt = applicable
+      .foldLeft(when(Events.hasBit(status, Events.DroppedBit), lit(-1))
+        .when(Events.hasBit(status, Events.FailedBit), lit(0))) {
+        // `fails` is false for Warn columns, and the optimizer prunes it
+        case (chain, (k, _, _, cc)) => chain.when(cc.fails, lit(k))
       }
-      df.withColumns(values.result() +
-        (Events.EventsCol -> concat((e0 +: terms.result()): _*)))
+      .otherwise(lit(applicable.size + 1))
+    val lower = df.withColumn(FailAtCol, failAt)
+    val fa = lower(FailAtCol)
+    def termsOf(k: Int, cdef: ColumnDef, cc: ColumnDef.Compiled) =
+      cc.checks.map { case (cond, msg) =>
+        Events.appendTerm(fa >= k && coalesce(cond, lit(false)),
+          cc.etype, s"cast_and_check:${cdef.name}", msg, cc.policy)
+      }
+    val e0 = lower(Events.EventsCol)
+    val terms = applicable.flatMap { case (k, cdef, _, cc) => termsOf(k, cdef, cc) }
+    val dropAt = applicable.collect {
+      case (k, _, _, cc) if cc.policy == ErrorPolicy.DropRow => k
+    }
+    val newStatus = when(fa.isin(dropAt: _*), lit(Events.FailedBit | Events.DroppedBit))
+      .when(fa > 0 && fa <= applicable.size, lit(Events.FailedBit))
+      .otherwise(status)
+    val values = applicable.map { case (k, cdef, oldVal, cc) =>
+      cdef.name -> when(fa < k, oldVal).otherwise(cc.value)
+    }.toMap
+    // the status replaces its own column in place, so the Map's order
+    // (which places undeclared-but-saved new columns) stays as it was
+    val casted = lower.withColumns(values +
+      (Events.EventsCol -> (if (terms.isEmpty) e0 else concat((e0 +: terms): _*))))
+      .withColumn(Events.StatusCol, newStatus)
+    if (!canDrop) (casted.drop(FailAtCol), None)
+    else {
+      val droppedAt = fa.isin((-1 +: dropAt): _*)
+      val droppedEvents = applicable.flatMap {
+        case (k, cdef, _, cc) if cc.policy == ErrorPolicy.DropRow => termsOf(k, cdef, cc)
+        case _ => Nil
+      }
+      // an arrived-dropped row brings its DROPPED_ROW events in `e0`, and
+      // the terms are gated off for it; any other dropped row arrived clean
+      val events = lower.filter(droppedAt)
+        .select(col(Events.RowNumCol).as("row_num"),
+          explode(concat((e0 +: droppedEvents): _*)).as("e"))
+        .filter(col("e.etype") === Events.DroppedType)
+        .select(col("row_num"), col("e.etype").as("etype"),
+          col("e.step").as("step"), col("e.message").as("message"))
+      (casted.filter(!droppedAt).drop(FailAtCol), Some(events))
     }
   }
 

@@ -107,7 +107,15 @@ final class Pipeline(
 
     var prevCached: Option[DataFrame] = None
     phases.foreach { phase =>
-      val phaseOut = runPhase(phase, df)
+      val phaseOut =
+        try runPhase(phase, df)
+        catch {
+          // a failed phase ends the run: nothing will read the predecessor's
+          // cache again (runPhase released its own output)
+          case t: Throwable =>
+            prevCached.foreach(_.unpersist(false))
+            throw t
+        }
       // runPhase materialized the new cache (event drain + checkpoint);
       // the predecessor's cache is no longer on the critical path
       prevCached.foreach(_.unpersist(false))
@@ -116,7 +124,7 @@ final class Pipeline(
       // the next phase's drain doesn't re-report them under its own name
       // (the checkpoint never carries events, so the in-memory pipe must
       // not either)
-      df = phaseOut.withColumn(Events.EventsCol, Events.emptyEvents)
+      df = Events.resetEvents(phaseOut)
       if (strictCheckpointCompat) {
         // re-read the checkpoint so the next phase sees exactly what was
         // serialized (CSV: everything re-stringified, like the reference)
@@ -139,23 +147,38 @@ final class Pipeline(
     val out0 = phase(input, context)
 
     // Phase.apply already removed per-column-policy dropped rows before
-    // its steps ran; this filter is a safety net for user steps that
-    // append DROPPED_ROW events directly. Their events are registered for
-    // the drain FIRST — filtering before registering would erase the only
-    // audit trail of those rows (every drop must be reported). Rows with
+    // its steps ran; this filter is a safety net for steps that can append
+    // DROPPED_ROW events directly (batch steps, and FlagRows with a
+    // DROPPED_ROW etype under a non-drop policy), so it is planned only
+    // when the phase has one. Their events are registered for the drain
+    // FIRST — filtering before registering would erase the only audit
+    // trail of those rows (every drop must be reported). Rows with
     // collected ERRORs are retained unchanged (X4).
-    val dropped = Events.rowDropped(out0(Events.EventsCol))
-    context.registerDroppedEvents(phase.name,
-      out0.filter(dropped)
-        .select(col(Events.RowNumCol).as("row_num"),
-          explode(col(Events.EventsCol)).as("e"))
-        .filter(col("e.etype") === Events.DroppedType)
-        .select(col("row_num"), col("e.etype").as("etype"),
-          col("e.step").as("step"), col("e.message").as("message")))
-    val out = out0.filter(!dropped)
-      // cache: event drain + checkpoint + next phase all reuse this plan
-      .persist()
+    val kept = if (!phase.steps.exists(_.appendsDropped)) out0 else {
+      val dropped = Events.rowDropped(out0)
+      context.registerDroppedEvents(phase.name,
+        out0.filter(dropped)
+          .select(col(Events.RowNumCol).as("row_num"),
+            explode(col(Events.EventsCol)).as("e"))
+          .filter(col("e.etype") === Events.DroppedType)
+          .select(col("row_num"), col("e.etype").as("etype"),
+            col("e.step").as("step"), col("e.message").as("message")))
+      out0.filter(!dropped)
+    }
+    // cache: event drain + checkpoint + next phase all reuse this plan
+    val out = kept.persist()
+    try finishPhase(phase, inputCols, out)
+    catch {
+      // the gates below throw; nothing downstream will read this cache
+      case t: Throwable =>
+        out.unpersist(false)
+        throw t
+    }
+    out
+  }
 
+  /** Drain, report, checkpoint and gate a phase's persisted output. */
+  private def finishPhase(phase: Phase, inputCols: Set[String], out: DataFrame): Unit = {
     context.collectRowEvents(phase.name, out)
 
     // H4 — consistency warning for undeclared new fields (phase.py:315-327)
@@ -188,7 +211,6 @@ final class Pipeline(
     if (context.phaseHadErrors(phase.name))
       throw DataException(
         s"Phase ${phase.name} failed with ${context.errorCount(phase.name)} errors")
-    out
   }
 
   private def save(df: DataFrame, path: String): Unit =

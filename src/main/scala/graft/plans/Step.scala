@@ -12,11 +12,17 @@ import org.apache.spark.sql.functions._
   * Error-skip discipline (X4): row-scoped steps must leave failed rows
   * unchanged. Declarative row steps get that automatically via
   * [[Events.guarded]]; arbitrary batch steps operate on the whole frame
-  * (same as the reference, where batch steps see every row).
+  * (same as the reference, where batch steps see every row). A batch
+  * step may append to the event channel directly, so the status bits are
+  * re-derived from the array after it.
   */
 sealed trait Step {
   def name: String
   def apply(df: DataFrame, ctx: Context, phase: String): DataFrame
+  /** True when the step can leave a DROPPED_ROW event in the channel
+    * instead of removing the row itself, so the phase output needs the
+    * pipeline's safety-net filter. */
+  def appendsDropped: Boolean = false
   /** True when the step reassigns row numbers (pivot/explode reshape the
     * row space entirely). A phase containing such a step is non-diffable,
     * like renumber=true phases — diffing against the previous checkpoint
@@ -44,6 +50,8 @@ object Step {
     * context, evaluated once at the phase boundary. */
   final case class FlagRows(name: String, cond: Column, message: Column,
       policy: ErrorPolicy, etype: String) extends Step {
+    override def appendsDropped: Boolean =
+      policy != ErrorPolicy.DropRow && etype == Events.DroppedType
     def apply(df: DataFrame, ctx: Context, phase: String): DataFrame = {
       val d = Events.withEventsCol(df)
       val fires = !Events.rowFailed(d) && coalesce(cond, lit(false))
@@ -57,8 +65,12 @@ object Step {
               message.cast("string").as("message")))
           d.filter(!fires)
         case _ =>
-          d.withColumn(Events.EventsCol,
-            Events.append(d(Events.EventsCol), fires, etype, name, message, policy))
+          val events = Events.append(d(Events.EventsCol), fires, etype, name, message, policy)
+          val status = d(Events.StatusCol)
+          val bits = Events.bitsOf(etype)
+          if (bits == 0) d.withColumn(Events.EventsCol, events)
+          else d.withColumns(Map(Events.EventsCol -> events,
+            Events.StatusCol -> when(fires, status.bitwiseOR(lit(bits))).otherwise(status)))
       }
     }
   }
@@ -69,9 +81,10 @@ object Step {
   final case class Batch(name: String, f: (DataFrame, Context) => DataFrame,
       checkSize: Boolean = false,
       override val renumbers: Boolean = false) extends Step {
+    override def appendsDropped: Boolean = true
     def apply(df: DataFrame, ctx: Context, phase: String): DataFrame = {
       val d = Events.withEventsCol(df)
-      val out = f(d, ctx)
+      val out = Events.withStatusFromEvents(f(d, ctx))
       if (checkSize) {
         val before = d.count()
         val after = out.count()
@@ -88,8 +101,9 @@ object Step {
     * steps that register lazily-drained events against the phase). */
   final case class PhaseAwareBatch(name: String,
       f: (DataFrame, Context, String) => DataFrame) extends Step {
+    override def appendsDropped: Boolean = true
     def apply(df: DataFrame, ctx: Context, phase: String): DataFrame =
-      f(Events.withEventsCol(df), ctx, phase)
+      Events.withStatusFromEvents(f(Events.withEventsCol(df), ctx, phase))
   }
 
   /** E4 context step: side effects only (may run actions to set

@@ -113,4 +113,25 @@ class PersistsSpec extends SparkSpec {
     Persists.releaseAll(spark)
     assert(fired.get(), "releaseAll did not drain the armed release")
   }
+
+  test("a phase that throws releases its own cache and its predecessor's: zero-row and collected-error gates") {
+    import java.nio.file.Files
+    import graft.functions.{ColType, ColumnDef}
+    import graft.plans.{DataException, Phase, Pipeline, Step}
+    import graft.sources.Format
+    def runFailing(failing: Phase, why: String): Unit = {
+      clean()
+      val dir = Files.createTempDirectory("graft_leak")
+      val src = Files.writeString(dir.resolve("in.csv"), "v\n1\n2\nx\n")
+      // the first phase passes; its output is cached while the second runs
+      val pipe = new Pipeline(spark, Seq(Phase("First"), failing),
+        dir.resolve("out").toString, src.toString, saveFormat = Format.Csv)
+      val ex = intercept[DataException](pipe.run())
+      assert(ex.getMessage.contains(why), ex.getMessage)
+      assert(Persists.livePersistedRdds(spark) === 0)
+    }
+    runFailing(Phase("Empty", steps = Seq(Step.dropRowsWhen("all", lit(true), "gone"))),
+      "zero rows")
+    runFailing(Phase("Errors", columns = Seq(ColumnDef("v", ColType.IntT))), "errors")
+  }
 }

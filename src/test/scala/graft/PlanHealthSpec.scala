@@ -1517,4 +1517,42 @@ class PlanHealthSpec extends SparkSpec {
     assert(winIdx >= 0 && aggIdx > winIdx,
       s"x199's window must consume the aggregated key frame:\n$p")
   }
+
+  test("declared-column validation stays codegen'd and linear: Warn/DropRow columns then a DropRow row step") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.functions._
+    import graft.functions.{ColType, ColumnDef}
+    import graft.plans.{Context, ErrorPolicy, Phase, RowNum, Step}
+    // (CodegenFallback expressions, expression nodes) of the executed plan
+    // of one phase with k declared columns
+    def shape(k: Int): (Int, Int) = {
+      val names = (1 to k).map(i => s"c$i")
+      val src = RowNum.assign(spark.range(0, 100)
+        .select(names.map(n => (col("id") % 13 - 1).cast("string").as(n)): _*))
+      val phase = Phase("Wide",
+        columns = names.zipWithIndex.map { case (n, i) =>
+          ColumnDef(n, ColType.IntT, minValue = Some(0), maxValue = Some(10),
+            onErrorOpt = Some(if (i % 2 == 0) ErrorPolicy.Warn else ErrorPolicy.DropRow))
+        },
+        steps = Seq(Step.dropRowsWhen("odd", col("c1") % 2 === 1, "odd c1")))
+      val plan = phase(src, new Context(spark)).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      var fallback = 0
+      var nodes = 0
+      plan.foreach(_.expressions.foreach(_.foreach { e =>
+        nodes += 1
+        if (e.isInstanceOf[CodegenFallback]) fallback += 1
+      }))
+      (fallback, nodes)
+    }
+    val (fallbackK, nodesK) = shape(4)
+    val (fallback2K, nodes2K) = shape(8)
+    assert(fallbackK == 0 && fallback2K == 0,
+      s"interpreted (CodegenFallback) expressions in the phase plan: $fallbackK at 4 columns, $fallback2K at 8")
+    assert(nodes2K <= 2.5 * nodesK,
+      s"expression nodes grow faster than linearly: $nodesK at 4 columns, $nodes2K at 8")
+  }
 }

@@ -6,7 +6,7 @@ import org.scalacheck.rng.Seed
 
 import graft.functions.{ColType, ColumnDef}
 import graft.operators.{BuiltinSteps, Dedup, TableDiff}
-import graft.plans.{Context, Events, RowNum}
+import graft.plans.{Context, ErrorPolicy, Events, Phase, RowNum, Step}
 
 /** ScalaCheck property layer (SURVEY §5 rebuild plan item 4): cast
   * round-trips, dedup idempotence, row-number stability, diff
@@ -251,5 +251,67 @@ class PropertySpec extends SparkSpec {
         .collect().map(_.getLong(1)).toSet
       assert(got == replay(toks, k, w), s"k=$k w=$w toks=$toks")
     }
+  }
+
+  test("property: the status bits agree with the event array on every kept row") {
+    // declared columns a..c under random Warn/Collect/DropRow policies, then
+    // a random sequence of steps over the undeclared column d: FlagRows
+    // under each policy, an enrichment batch that appends warnings with
+    // appendTerm after a lookup join, and batch steps that append ERROR and
+    // DROPPED_ROW events to the array directly
+    val lookup = Seq("1", "4", "9").toDF("k")
+    def enrich(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      val joined = d.join(broadcast(lookup), d("d") === lookup("k"), "left")
+      joined.withColumn(Events.EventsCol, concat(joined(Events.EventsCol),
+        Events.appendTerm(joined("k").isNull, Events.WarningType, "enrich",
+          concat(lit("no lookup for "), col("d")), ErrorPolicy.Warn))).drop("k")
+    }
+    def rawAppend(etype: String, cond: org.apache.spark.sql.Column)(
+        d: org.apache.spark.sql.DataFrame) =
+      d.withColumn(Events.EventsCol, Events.append(d(Events.EventsCol), cond,
+        etype, s"raw_$etype", lit("appended directly"), ErrorPolicy.Collect))
+    val catalog: IndexedSeq[Step] = IndexedSeq(
+      Step.warnRowsWhen("warn_4", col("d") === "4", "four"),
+      Step.errorRowsWhen("error_x", col("d") === "x", "x"),
+      Step.dropRowsWhen("drop_blank", col("d") === "", "blank"),
+      Step.FlagRows("mark_9", col("d") === "9", lit("nine"), ErrorPolicy.Collect,
+        Events.DroppedType),
+      Step.errorRowsWhen("stop_never", col("d") === "never", "never",
+        ErrorPolicy.StopNow),
+      Step.batch("enrich")((d, _) => enrich(d)),
+      Step.batch("raw_error")((d, _) =>
+        rawAppend(Events.ErrorType, col(Events.RowNumCol) % 4 === 0)(d)),
+      Step.batch("raw_drop")((d, _) =>
+        rawAppend(Events.DroppedType, col(Events.RowNumCol) % 7 === 0)(d)))
+    val policyGen = Gen.oneOf(ErrorPolicy.Warn, ErrorPolicy.Collect, ErrorPolicy.DropRow)
+    val cellGen = Gen.oneOf("1", "4", "9", "12", "-2", "x", "")
+    val caseGen = for {
+      policies <- Gen.listOfN(3, policyGen)
+      nCols <- Gen.chooseNum(0, 3)
+      steps <- Gen.listOfN(4, Gen.chooseNum(0, catalog.size - 1))
+      rows <- Gen.listOfN(40, Gen.listOfN(4, cellGen))
+    } yield (policies.take(nCols), steps.map(catalog), rows)
+    var seen = Set.empty[Int]
+    forAll(caseGen, n = 8) { case (policies, steps, rows) =>
+      val df = RowNum.assign(rows.map(r => (r(0), r(1), r(2), r(3)))
+        .toDF("a", "b", "c", "d"))
+      val columns = policies.zip(Seq("a", "b", "c")).map { case (p, n) =>
+        ColumnDef(n, ColType.IntT, minValue = Some(0), maxValue = Some(10),
+          onErrorOpt = Some(p))
+      }
+      val out = Phase("P", columns = columns, steps = steps)(df, ctx)
+      val got = out.select(col(Events.StatusCol), col(Events.EventsCol + ".etype"))
+        .collect().map(r => (r.getInt(0), r.getSeq[String](1)))
+      got.foreach { case (status, etypes) =>
+        seen += status
+        val failed = etypes.exists(t => t == Events.ErrorType || t == Events.DroppedType)
+        val dropped = etypes.contains(Events.DroppedType)
+        assert(((status & Events.FailedBit) != 0) == failed &&
+          ((status & Events.DroppedBit) != 0) == dropped,
+          s"status $status vs events $etypes (policies $policies, steps ${steps.map(_.name)})")
+      }
+    }
+    // the samples must exercise every status, or the property is vacuous
+    assert(seen == Set(0, Events.FailedBit, Events.FailedBit | Events.DroppedBit), seen)
   }
 }
