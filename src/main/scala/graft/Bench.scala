@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: every SparkEntry query at SPARK_GRAFT_SF_DIR, one JSON
   * line to stdout AND to a file (SPARK_GRAFT_BENCH_OUT, default
   * bench_result.json — a stdout scrape can be defeated by sbt's [info]
-  * prefix; the file cannot).
+  * prefix; the file cannot), then a compact summary line to stdout and to
+  * bench_summary.json in the same directory.
   *
   * FORKED BY DEFAULT: the full sweep runs as child JVMs, one per
   * content-hash bucket (SPARK_GRAFT_BENCH_BUCKETS, default 24 → ~14
@@ -75,10 +76,13 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"failed":${errors.size},"sf":${jstr(sfDir)}}"""
     println(line)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
-    }
+    // a failed write is logged, never thrown: stdout still carries the line
+    def write(name: String, path: => java.nio.file.Path, text: String): Unit =
+      try java.nio.file.Files.writeString(path, text + "\n")
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $name: ${e.getMessage}")
+      }
+    write(outPath, java.nio.file.Paths.get(outPath), line)
     // Compact summary as the FINAL stdout line (round 11): at 337 queries
     // the full per-query line is ~11 KB and any consumer that keeps only a
     // bounded output tail truncates it mid-object (the round-10 driver
@@ -89,7 +93,11 @@ object Bench {
     // an unparsable SPARK_GRAFT_CPUS reports null rather than breaking the line
     val cpus = sys.env.get("SPARK_GRAFT_CPUS")
       .fold("4")(_.trim.toIntOption.fold("null")(_.toString))
-    println(s"""{"total_sec":$total,"n":${ok.size},"failed":${errors.size},"sf":${jstr(sfDir)},"cpus":$cpus,"result_file":${jstr(outPath)}}""")
+    val summary = s"""{"total_sec":$total,"n":${ok.size},"failed":${errors.size},"sf":${jstr(sfDir)},"cpus":$cpus,"result_file":${jstr(outPath)}}"""
+    println(summary)
+    // the same line as a file next to the full artifact
+    write("bench_summary.json",
+      java.nio.file.Paths.get(outPath).resolveSibling("bench_summary.json"), summary)
   }
 
   /** Parent: assign each query to a chunk BY CONTENT (murmur3 of the query

@@ -58,7 +58,6 @@ object Curation {
         // bytes per doc, serialized, spill-safe — unlike persisting the
         // full frame (events array + metrics), which measured SLOWER than
         // recompute here.
-        val spark = df.sparkSession
         val slim = df.select(col("doc_id"), col("text"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
         try {
@@ -80,8 +79,8 @@ object Curation {
           // explicit size guard, else a key-shuffled anti-join.
           val losers = pairs.select(col("id_b").as("doc_id")).distinct()
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+          graft.plans.Persists.onScopeEnd(() => losers.unpersist(false))
           val nLosers = losers.count()
-          graft.plans.Persists.onNextAction(spark)(() => losers.unpersist(false))
           val removal =
             if (nLosers <= BroadcastLoserMax) broadcast(losers)
             else losers.hint("shuffle_hash")

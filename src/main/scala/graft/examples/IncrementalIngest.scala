@@ -80,10 +80,11 @@ object IncrementalIngest {
     // fps. Persisted WIDE (documents rows are id + text + a few tags;
     // text dominates either way): the pair walks read its narrow
     // projection, and the final anti-joins read the same blocks instead
-    // of re-running the fingerprint dedup — released after the
-    // consumer's first action, like the loser frames.
+    // of re-running the fingerprint dedup — released when the owner
+    // scope exits, like the loser frames.
     val exact = Dedup.dedupAgainstHistory(q, historyFp, "doc_id", "text")
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    Persists.onScopeEnd(() => exact.unpersist(false))
     val slim = exact.select(col("doc_id"), col("text"))
 
     // the batch's band buckets — signed ONCE, shared by stages 3 and 4
@@ -110,13 +111,14 @@ object IncrementalIngest {
         // 3. near-dup vs history: batch docs similar to ANY snapshot doc
         // drop. The loser set stays a FRAME — persisted and materialized
         // NOW (count(), not collect(): the pair search must run exactly
-        // once, and its blocks outlive this scope until the consumer's
-        // first action), then anti-joined twice below.
+        // once, and its blocks outlive this function until the owner
+        // scope exits), then anti-joined twice below.
         val crossLosers = Dedup.lshPairsFromBucketsAcross(
             buckets, historyBuckets, slim, histSlim, "doc_id", "text",
             threshold = threshold)
           .select(col("id_a").as("doc_id")).distinct()
           .persist(StorageLevel.MEMORY_AND_DISK_SER)
+        Persists.onScopeEnd(() => crossLosers.unpersist(false))
         crossLosers.count()
 
         // 4. in-batch clusters over the survivors: REUSE the batch buckets
@@ -132,16 +134,9 @@ object IncrementalIngest {
           .select(col("id").as("doc_id"))
         (crossLosers, clusterLosers)
       }
-      Persists.onNextAction(spark)(() => crossLosers.unpersist(false))
-      Persists.onNextAction(spark)(() => exact.unpersist(false))
-
       exact
         .join(crossLosers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
         .join(clusterLosers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-    } catch {
-      // the on-next-action releases above only arm on success; don't
-      // leak exact's blocks past a failed pair search
-      case t: Throwable => exact.unpersist(blocking = false); throw t
     } finally {
       // fully consumed by the eager stages above (crossLosers' count and
       // ConnectedComponents' internal actions); the returned plan depends

@@ -11,6 +11,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.plans.GraftExtensions
+
 /** Native Catalyst membership test against a pre-built Bloom filter:
   * `graft_bloom_contains(strCol, filterBytesLiteral)` -> boolean.
   *
@@ -62,16 +64,18 @@ case class BloomMightContain(child: Expression, filterBytes: Array[Byte])
 object BloomExpression {
   val Name = "graft_bloom_contains"
 
+  val builders: Seq[(String, GraftExtensions.Builder)] = Seq(
+    Name -> (exprs => {
+      val bytes = exprs(1) match {
+        case Literal(v: Array[Byte], BinaryType) => v
+        case other => throw new IllegalArgumentException(
+          s"$Name's second argument must be a literal binary, got $other")
+      }
+      BloomMightContain(exprs(0), bytes)
+    }))
+
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => {
-        val bytes = exprs(1) match {
-          case Literal(v: Array[Byte], BinaryType) => v
-          case other => throw new IllegalArgumentException(
-            s"$Name's second argument must be a literal binary, got $other")
-        }
-        BloomMightContain(exprs(0), bytes)
-      }, "built-in")
+    GraftExtensions.register(spark, builders)
 
   /** Membership test of a string column against a serialized
     * [[BloomFilter]] image (see [[graft.operators.Dedup.buildFpBloom]]). */

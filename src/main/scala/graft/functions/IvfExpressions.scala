@@ -3,10 +3,12 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
+
+import graft.plans.GraftExtensions
 
 /** Native Catalyst expressions for the IVF coarse quantizer (sign-pattern
   * centroids, [[graft.operators.Similarity.ivfAssign]] /
@@ -217,36 +219,26 @@ object IvfExpressions {
     }
   }
 
-  private def intLit(e: Expression, name: String, what: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$name's $what must be a literal int, got $other")
+  private def signsOf(e: Expression, name: String, dims: Int): Array[Array[Double]] = {
+    val flat = GraftExtensions.doublesLit(e, s"$name's second argument")
+    require(flat.nonEmpty && flat.length % dims == 0,
+      s"$name: flat sign matrix length ${flat.length} not a multiple of dims=$dims")
+    flat.grouped(dims).toArray
   }
 
-  private def signsOf(e: Expression, name: String, dims: Int): Array[Array[Double]] =
-    e match {
-      case Literal(v: ArrayData, ArrayType(DoubleType, _)) =>
-        val flat = v.toDoubleArray()
-        require(flat.nonEmpty && flat.length % dims == 0,
-          s"$name: flat sign matrix length ${flat.length} not a multiple of dims=$dims")
-        flat.grouped(dims).toArray
-      case other => throw new IllegalArgumentException(
-        s"$name's second argument must be a literal array<double>, got $other")
-    }
+  val builders: Seq[(String, GraftExtensions.Builder)] = Seq(
+    AssignName -> (exprs => {
+      val dims = GraftExtensions.intLit(exprs(2), s"$AssignName's third argument (dims)")
+      IvfAssignExpr(exprs(0), signsOf(exprs(1), AssignName, dims))
+    }),
+    ProbesName -> (exprs => {
+      val dims = GraftExtensions.intLit(exprs(2), s"$ProbesName's third argument (dims)")
+      val np = GraftExtensions.intLit(exprs(3), s"$ProbesName's fourth argument (nprobe)")
+      IvfProbesExpr(exprs(0), signsOf(exprs(1), ProbesName, dims), np)
+    }))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AssignName, exprs => {
-        val dims = intLit(exprs(2), AssignName, "third argument (dims)")
-        IvfAssignExpr(exprs(0), signsOf(exprs(1), AssignName, dims))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ProbesName, exprs => {
-        val dims = intLit(exprs(2), ProbesName, "third argument (dims)")
-        val np = intLit(exprs(3), ProbesName, "fourth argument (nprobe)")
-        IvfProbesExpr(exprs(0), signsOf(exprs(1), ProbesName, dims), np)
-      }, "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    GraftExtensions.register(spark, builders)
 
   def assign(spark: SparkSession, vec: Column, numCentroids: Int,
       dims: Int): Column = {

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
+import graft.plans.GraftExtensions
+
 /** Runtime for [[MinhashSignature]]: the whole minhash signature of one
   * document in ONE pass over its shingle array.
   *
@@ -108,16 +110,12 @@ case class MinhashSignature(child: Expression, numHashes: Int)
 object MinhashExpression {
   val Name = "graft_minhash"
 
+  val builders: Seq[(String, GraftExtensions.Builder)] = Seq(
+    Name -> (exprs => MinhashSignature(exprs(0),
+      GraftExtensions.intLit(exprs(1), s"$Name's second argument"))))
+
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => {
-        val k = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash's second argument must be a literal int, got $other")
-        }
-        MinhashSignature(exprs(0), k)
-      }, "built-in")
+    GraftExtensions.register(spark, builders)
 
   /** Whole minhash signature of a shingle-array column, one pass, narrow. */
   def signature(spark: SparkSession, shingles: Column, numHashes: Int): Column = {

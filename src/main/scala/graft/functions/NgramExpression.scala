@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.plans.GraftExtensions
+
 /** Runtime for [[NgramShingles]]: a document's positional word n-grams
   * ("a b c d", n=3 -> ["a b c", "b c d"]) in ONE pass over its token
   * array.
@@ -88,14 +90,10 @@ case class NgramShingles(child: Expression, n: Int)
 object NgramExpression {
   val Name = "graft_ngrams"
 
+  val builders: Seq[(String, GraftExtensions.Builder)] = Seq(
+    Name -> (exprs => NgramShingles(exprs(0),
+      GraftExtensions.intLit(exprs(1), s"$Name's second argument"))))
+
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => {
-        val n = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_ngrams's second argument must be a literal int, got $other")
-        }
-        NgramShingles(exprs(0), n)
-      }, "built-in")
+    GraftExtensions.register(spark, builders)
 }

@@ -3,10 +3,12 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
+
+import graft.plans.GraftExtensions
 
 /** Native Catalyst expression for product-quantization encoding: the
   * per-subspace argmin over a fixed codebook, emitted as ONE array<long>
@@ -122,26 +124,19 @@ object PqExpression {
 
   /** Registry form: graft_pq_encode(vec, flatCodebookLiteral, m, dsub) —
     * the flat codebook literal is row-major (k rows of m*dsub doubles). */
+  val builders: Seq[(String, GraftExtensions.Builder)] = Seq(
+    Name -> (exprs => {
+      val m = GraftExtensions.intLit(exprs(2), s"$Name's third argument (m)")
+      val dsub = GraftExtensions.intLit(exprs(3), s"$Name's fourth argument (dsub)")
+      val flat = GraftExtensions.doublesLit(exprs(1), s"$Name's second argument")
+      val rowLen = m * dsub
+      require(flat.nonEmpty && flat.length % rowLen == 0,
+        s"$Name: flat codebook length ${flat.length} is not a multiple of m*dsub=$rowLen")
+      PqEncodeCodes(exprs(0), flat.grouped(rowLen).toArray, m, dsub)
+    }))
+
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => {
-        def intLit(e: Expression, what: String): Int = e match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"$Name's $what must be a literal int, got $other")
-        }
-        val m = intLit(exprs(2), "third argument (m)")
-        val dsub = intLit(exprs(3), "fourth argument (dsub)")
-        val flat = exprs(1) match {
-          case Literal(v: ArrayData, ArrayType(DoubleType, _)) => v.toDoubleArray()
-          case other => throw new IllegalArgumentException(
-            s"$Name's second argument must be a literal array<double>, got $other")
-        }
-        val rowLen = m * dsub
-        require(flat.nonEmpty && flat.length % rowLen == 0,
-          s"$Name: flat codebook length ${flat.length} is not a multiple of m*dsub=$rowLen")
-        PqEncodeCodes(exprs(0), flat.grouped(rowLen).toArray, m, dsub)
-      }, "built-in")
+    GraftExtensions.register(spark, builders)
 
   /** PQ code array of an array<double> column against `codebook`
     * (k rows, each padded/truncated to exactly m*dsub elements). */

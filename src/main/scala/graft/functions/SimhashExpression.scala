@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.plans.GraftExtensions
+
 /** Runtime for [[SimhashFingerprint]]: the 60-bit SimHash of one document
   * in ONE pass over its token array — bit-identical to the column-composed
   * plan in `Dedup.simhashAgg` (kept as the in-repo equivalence oracle):
@@ -94,18 +96,18 @@ object SimhashExpression {
   val Name = "graft_simhash"
   private val NameNN = "graft_simhash_nn"
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => SimhashFingerprint(exprs(0)), "built-in")
+  val builders: Seq[(String, GraftExtensions.Builder)] = Seq(
+    Name -> (exprs => SimhashFingerprint(exprs(0))),
     // known-not-null variant: ONLY for inputs proven non-empty (e.g.
     // split() of a non-null string, which always yields >= 1 element).
     // The tag lets the optimizer FOLD the isnotnull() a downstream join
     // key would otherwise push down — that pushed filter re-evaluates the
     // whole fingerprint (measured as a 3x md5 bill in the banded join).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      NameNN, exprs => org.apache.spark.sql.catalyst.expressions.KnownNotNull(
-        SimhashFingerprint(exprs(0))), "built-in")
-  }
+    NameNN -> (exprs => org.apache.spark.sql.catalyst.expressions.KnownNotNull(
+      SimhashFingerprint(exprs(0)))))
+
+  def register(spark: SparkSession): Unit =
+    GraftExtensions.register(spark, builders)
 
   def fingerprint(spark: SparkSession, tokens: Column): Column = {
     register(spark)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
+import graft.plans.GraftExtensions
+
 /** Native Catalyst expression for the dot product of two double arrays.
   *
   * The composable form — `aggregate(zip_with(a, b, _*_), 0.0, _+_)` —
@@ -72,11 +74,13 @@ case class DotProduct(left: Expression, right: Expression)
 object VectorExpressions {
   val DotName = "graft_dot"
 
+  val builders: Seq[(String, GraftExtensions.Builder)] = Seq(
+    DotName -> (exprs => DotProduct(exprs(0), exprs(1))))
+
   /** Register graft's vector expressions in the session function registry
     * (idempotent; also makes them usable from SQL text). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotName, exprs => DotProduct(exprs(0), exprs(1)), "built-in")
+    GraftExtensions.register(spark, builders)
 
   /** Codegen'd dot product of two array<double> columns. Registers on the
     * given session so the analyzer can resolve the call. */

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
+import graft.plans.GraftExtensions
+
 /** Runtime for [[WinnowFingerprints]]: a document's distinct winnowing
   * fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD 2003) in ONE pass
   * over its TOKEN array — k-gram construction, hashing, and the sliding
@@ -121,16 +123,13 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
 object WinnowExpression {
   val Name = "graft_winnow"
 
-  private def litInt(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"graft_winnow's $what must be a literal int, got $other")
-  }
+  val builders: Seq[(String, GraftExtensions.Builder)] = Seq(
+    Name -> (exprs => WinnowFingerprints(exprs(0),
+      GraftExtensions.intLit(exprs(1), s"$Name's k"),
+      GraftExtensions.intLit(exprs(2), s"$Name's w"))))
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => WinnowFingerprints(exprs(0),
-        litInt(exprs(1), "k"), litInt(exprs(2), "w")), "built-in")
+    GraftExtensions.register(spark, builders)
 
   /** Distinct winnowing fingerprints of a TOKEN-array column. */
   def fingerprints(spark: SparkSession, tokens: Column, k: Int,

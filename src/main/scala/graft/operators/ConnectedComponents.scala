@@ -34,7 +34,7 @@ import graft.plans.Persists
   * so every round's joins co-locate for free and only the propagated
   * labels move. Per-round state persists MEMORY_AND_DISK and is released
   * as soon as the next round materializes; the final frame's blocks are
-  * scoped to the consumer's first action via [[Persists.onNextAction]].
+  * released when the owner scope exits ([[Persists.scope]]).
   *
   * Small graphs (at most `smallGraphMax` symmetric edges — an explicit,
   * bounded guard) take a driver union-find fast path instead: the
@@ -116,7 +116,7 @@ object ConnectedComponents {
     sym.unpersist(blocking = false)
     require(converged, s"connected components did not converge in $maxIter rounds")
     val out = labels
-    Persists.onNextAction(spark)(() => out.unpersist(blocking = false))
+    Persists.onScopeEnd(() => out.unpersist(blocking = false))
     spark.createDataset(labels).toDF("id", "component")
   }
 

@@ -207,10 +207,9 @@ object CorpusOps {
     * partition offsets, then a per-partition streaming scan — NOT a
     * partition-less `Window.orderBy`, which would move every row to one
     * task. The sorted input is persisted (MEMORY_AND_DISK_SER) around the
-    * two passes so the upstream executes once; the blocks are scoped to the
-    * first Dataset action on the output
-    * ([[graft.plans.Persists.releaseOnNextAction]] — same contract as
-    * `plans.RowNum.assign`).
+    * two passes so the upstream executes once; the blocks are released when
+    * the owner scope exits ([[graft.plans.Persists.scope]] — same contract
+    * as `plans.RowNum.assign`).
     *
     * Output: input columns + `start_offset` (exclusive cumsum of
     * `tokensCol`, long) + `chunk_id` (= start_offset / capacity, long).
@@ -227,6 +226,7 @@ object CorpusOps {
       .add(StructField("chunk_id", LongType, nullable = false))
     val rdd0 = sorted.rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    graft.plans.Persists.onScopeEnd(() => rdd0.unpersist(blocking = false))
     val sums = rdd0
       .mapPartitionsWithIndex((pid, it) =>
         Iterator(pid -> it.foldLeft(0L)((acc, r) => acc + numAt(r, tokIdx))))
@@ -242,7 +242,6 @@ object CorpusOps {
         Row.fromSeq(r.toSeq :+ start :+ (start / capacity))
       }
     }
-    graft.plans.Persists.releaseOnNextAction(df.sparkSession, rdd0)
     df.sparkSession.createDataFrame(rdd, schema)
   }
 

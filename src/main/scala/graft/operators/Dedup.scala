@@ -366,14 +366,12 @@ object Dedup {
       maxFpFreq: Option[Int] = None): DataFrame = {
     // the selection scan (md5 per k-gram + the window-min ladder) is the
     // expensive leg and feeds FOUR consumers (hot-list, cap anti-join,
-    // both self-join sides) — persist it once, release on the consumer's
-    // first action (the pageRank/kCore lifecycle); without this the plan
+    // both self-join sides) — persist it once, release when the owner
+    // scope exits (the pageRank/kCore lifecycle); without this the plan
     // re-runs the scan per consumer (measured 4x at sf0.1)
     val idx0 = winnowingFingerprints(df, idCol, textCol, k, w)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    graft.plans.Persists.onNextAction(df.sparkSession) { () =>
-      idx0.unpersist(); ()
-    }
+    graft.plans.Persists.onScopeEnd(() => idx0.unpersist())
     val idx = maxFpFreq match {
       case None => idx0
       case Some(cap) =>
@@ -638,8 +636,7 @@ object Dedup {
         // schedules concurrently — a lazily-persisted frame would be
         // computed by each of them in parallel before any cache block
         // lands. Build it ONCE eagerly (the e2/e3 pipeline pattern:
-        // persist + count), release on the caller's next action.
-        val spark = df.sparkSession
+        // persist + count), released when the owner scope exits.
         val idx = df.select(col(idCol).as("id"),
             explode(shingles(col(textCol), n)).as("s"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -676,10 +673,9 @@ object Dedup {
         // (broadcast mode needs no barrier: the join is a narrow map over
         // the already-cached idx)
         if (!broadcastable) idxf.count()
-        graft.plans.Persists.onNextAction(spark)(() => {
+        graft.plans.Persists.onScopeEnd(() => {
           idx.unpersist(false); hotSet.unpersist(false)
           if (!broadcastable) idxf.unpersist(false)
-          ()
         })
         // candidate pairs keep their CAPPED-intersection count from the
         // same partial-agged groupBy the uncapped form uses (a count is

@@ -181,7 +181,7 @@ object EntityResolution {
     val gs = rows.groupingSets(sets, gcols.map(col): _*)
       .agg(count(lit(1)).as("cnt"), grouping_id().as("__gid"))
       .localCheckpoint(true)
-    val release = graft.plans.Persists.checkpointRelease(gs)
+    graft.plans.Persists.releaseCheckpointAtScopeEnd(gs)
     // shared truth totals: true pairs + corpus row count (Σ cnt over
     // the truth set is exactly N)
     val truthTot = gs.filter(col("__gid") === gidOf("__t"))
@@ -209,9 +209,7 @@ object EntityResolution {
               lit(null).cast(DoubleType))
             .otherwise(lit(2.0) * rr * pc / (rr + pc)), 6).as("f_quality"))
     }
-    val out = perKey.reduce(_ unionAll _)
-    graft.plans.Persists.onActionOf(out)(release)
-    out
+    perKey.reduce(_ unionAll _)
   }
 
   def blockingQuality(df: DataFrame, blockExpr: String,

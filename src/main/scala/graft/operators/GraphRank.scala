@@ -17,7 +17,7 @@ import graft.functions.TextFunctions
   * transition frame plus one partial-agged groupBy(dst). State per
   * iteration is one (node, pr) row per vertex; nothing ever collects to
   * the driver. The transition and node frames are persisted across
-  * iterations and released on the consumer's first action
+  * iterations and released when the owner scope exits
   * ([[graft.plans.Persists]] lifecycle, the ConnectedComponents pattern).
   *
   * Dangling nodes (in-edges only) keep the teleport term and simply
@@ -33,7 +33,6 @@ object GraphRank {
     * cross-engine contract is the rounded fixpoint approximation). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       wtCol: String, damping: Double = 0.85, iters: Int = 3): DataFrame = {
-    val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wtCol).cast(DoubleType).as("wt"))
     val outw = e.groupBy(col("src")).agg(sum(col("wt")).as("ow"))
@@ -57,9 +56,7 @@ object GraphRank {
         .select(col("node"),
           (lit(teleport) + lit(damping) * coalesce(col("cin"), lit(0.0))).as("pr"))
     }
-    graft.plans.Persists.onNextAction(spark) { () =>
-      trans.unpersist(); nodes.unpersist(); ()
-    }
+    graft.plans.Persists.onScopeEnd(() => { trans.unpersist(); nodes.unpersist() })
     r.select(col("node"), round(col("pr"), 6).as("pr"))
   }
 
@@ -80,7 +77,6 @@ object GraphRank {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       wtCol: String, seeds: DataFrame, seedCol: String,
       damping: Double = 0.85, iters: Int = 3): DataFrame = {
-    val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wtCol).cast(DoubleType).as("wt"))
     val outw = e.groupBy(col("src")).agg(sum(col("wt")).as("ow"))
@@ -114,9 +110,9 @@ object GraphRank {
         .select(col("node"),
           (col("rv") + lit(damping) * coalesce(col("cin"), lit(0.0))).as("pr"))
     }
-    graft.plans.Persists.onNextAction(spark) { () =>
-      trans.unpersist(); nodes.unpersist(); restart.unpersist(); ()
-    }
+    graft.plans.Persists.onScopeEnd(() => {
+      trans.unpersist(); nodes.unpersist(); restart.unpersist()
+    })
     r.select(col("node"), round(col("pr"), 6).as("pr"))
   }
 
@@ -272,7 +268,6 @@ object GraphRank {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val spark = pairs.sparkSession
     val e0 = pairs
       .filter(col(aCol).isNotNull && col(bCol).isNotNull &&
         col(aCol) =!= col(bCol))
@@ -307,9 +302,7 @@ object GraphRank {
       rounds += 1
     }
     val core = cur
-    graft.plans.Persists.onNextAction(spark) { () =>
-      edges.unpersist(); core.unpersist(); ()
-    }
+    graft.plans.Persists.onScopeEnd(() => { edges.unpersist(); core.unpersist() })
     edges
       .join(core.hint("shuffle_hash"), Seq("a"), "left_semi")
       .join(core.select(col("a").as("b")).hint("shuffle_hash"),

@@ -175,7 +175,7 @@ object LanguageModel {
     * c3 table; the bigram/unigram tables derive from the same filtered
     * doc set; all five scoring joins are shuffle_hash-pinned on n-gram
     * keys (no vocabulary broadcast). The tokenized frame is persisted
-    * (lazy fill, released on the consumer's action) so the one plan that
+    * (lazy fill, released when the owner scope exits) so the one plan that
     * consumes it four ways — trigram probe, c3, c2, c1 — tokenizes the
     * corpus once, and (T, V) rides along as a broadcast 1-row frame
     * instead of a separate driver action (round 10: the action shape
@@ -190,6 +190,7 @@ object LanguageModel {
       TextFunctions.tokens(col(textCol)).as("ts"))
       .filter(size(col("ts")) >= 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.plans.Persists.onScopeEnd(() => toks.unpersist(blocking = false))
     val tri = toks
       .select(col("id"), posexplode(slice(col("ts"), lit(1), size(col("ts")) - 2))
         .as(Seq("i", "w1")), col("ts"))
@@ -220,18 +221,15 @@ object LanguageModel {
         lit(l1) * (col("c1c") + alpha) / col("__tav") +
         lit(l2) * (col("c2b") + alpha) / (col("c1b") + col("__av")) +
         lit(l3) * (col("c3") + alpha) / (col("c2a") + col("__av"))))
-    val out = scored.groupBy(col("id"))
+    scored.groupBy(col("id"))
       .agg(count(lit(1)).as("n_trigrams"), sum(col("lp")).as("ll"))
       .select(col("id").as(idCol), col("n_trigrams"),
         round(-col("ll") / col("n_trigrams"), 6).as("nll"))
-    graft.plans.Persists.onActionOf(out)(
-      () => { toks.unpersist(blocking = false); () })
-    out
   }
 
   /** CCNet's head/middle/tail banding: tertile buckets of [[bigramNll]].
     * The scored frame is persisted around the two passes (threshold agg +
-    * band scan; blocks released on the consumer's first action); the
+    * band scan; blocks released when the owner scope exits); the
     * tertile cut points are an O(1) driver collect — `percentile()` here
     * is a one-group aggregate over one double per document, the same
     * bounded shape as the x13 gate. At petabyte document counts swap the
@@ -239,14 +237,13 @@ object LanguageModel {
     * bounded executor memory) — the banding scan is unchanged. */
   def qualityBands(docs: DataFrame, idCol: String, textCol: String,
       alpha: Double = 1.0, topV: Int = 0): DataFrame = {
-    val spark = docs.sparkSession
     val scored = bigramNll(docs, idCol, textCol, alpha, topV)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    graft.plans.Persists.onScopeEnd(() => scored.unpersist())
     val th = scored.agg(
       expr("percentile(nll, 1.0/3)").as("t1"),
       expr("percentile(nll, 2.0/3)").as("t2")).head()
     val (t1, t2) = (th.getDouble(0), th.getDouble(1))
-    graft.plans.Persists.onNextAction(spark)(() => { scored.unpersist(); () })
     scored.select(col(idCol), col("nll"),
       when(col("nll") <= t1, lit("head"))
         .when(col("nll") <= t2, lit("middle"))
@@ -274,14 +271,13 @@ object LanguageModel {
     */
   def pmiCollocations(docs: DataFrame, idCol: String, textCol: String,
       minCount: Long = 5L): DataFrame = {
-    val spark = docs.sparkSession
     val toks = docs.select(col(idCol).as("id"),
       TextFunctions.tokens(col(textCol)).as("ts"))
       .filter(size(col("ts")) >= 2)
     val bi = bigrams(toks)
     // both count tables are consumed twice (scoring joins + totals);
     // persist the REDUCED frames so each corpus explode runs exactly once
-    // — deterministic release after the consumer's first action
+    // — released when the owner scope exits
     val c2 = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_ab"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // unigram counts over ALL token positions (not just bigram lefts):
@@ -291,9 +287,7 @@ object LanguageModel {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val totals = c2.agg(sum(col("c_ab")).as("n_bi"))
       .crossJoin(c1.agg(sum(col("c_w")).as("n_tok")))
-    graft.plans.Persists.onNextAction(spark)(() => {
-      c2.unpersist(); c1.unpersist(); ()
-    })
+    graft.plans.Persists.onScopeEnd(() => { c2.unpersist(); c1.unpersist() })
     c2.filter(col("c_ab") >= minCount)
       .join(broadcast(c1.withColumnRenamed("w", "w1")
         .withColumnRenamed("c_w", "c_a")), Seq("w1"))
@@ -389,6 +383,7 @@ object LanguageModel {
       .select(col(idCol).as("id"), col("lang"),
         round(col("nll") * 1000).cast("long").as("nll_milli"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.plans.Persists.onScopeEnd(() => d.unpersist(blocking = false))
     val grid = d.groupBy(col("lang"), col("nll_milli"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("cum", sum(col("cnt")).over(
@@ -399,13 +394,10 @@ object LanguageModel {
       .groupBy(col("lang"))
       .agg(min(when(col("cum") * 3 >= col("n"), col("nll_milli"))).as("b1"),
         min(when(col("cum") * 3 >= col("n") * 2, col("nll_milli"))).as("b2"))
-    val out = d.join(broadcast(bounds), Seq("lang"))
+    d.join(broadcast(bounds), Seq("lang"))
       .select(col("id"), col("lang"), col("nll_milli"),
         when(col("nll_milli") <= col("b1"), "head")
           .when(col("nll_milli") <= col("b2"), "middle")
           .otherwise("tail").as("bucket"))
-    graft.plans.Persists.onActionOf(out)(
-      () => { d.unpersist(blocking = false); () })
-    out
   }
 }

@@ -58,10 +58,10 @@ object Percentiles {
       (lo + 1, hi + 1, pos - lo) // 1-based ranks for RowNum
     }
     val needed = brackets.flatMap { case (lo, hi, _) => Seq(lo, hi) }.distinct
-    // withAssigned: the numbered frame is fully consumed by this collect,
-    // so the numbering persist is dropped deterministically
-    val picked = graft.plans.RowNum.withAssigned(vals.orderBy(col("v"))) { numbered =>
-      numbered
+    // the numbered frame is fully consumed by this collect, so its
+    // numbering persist is dropped as soon as the collect returns
+    val picked = graft.plans.Persists.scope {
+      graft.plans.RowNum.assign(vals.orderBy(col("v")))
         .filter(col(graft.plans.Events.RowNumCol).isin(needed: _*))
         .select(col(graft.plans.Events.RowNumCol).as("rk"), col("v"))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -211,6 +211,7 @@ object Percentiles {
       .orderBy(col("v").asc)
     val rdd0 = sorted.rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    graft.plans.Persists.onScopeEnd(() => rdd0.unpersist(blocking = false))
     val sums = rdd0.mapPartitionsWithIndex((pid, it) =>
       Iterator(pid -> it.foldLeft(0L)((acc, r) => acc + r.getLong(1))))
       .collect().toMap
@@ -227,7 +228,6 @@ object Percentiles {
       },
       StructType(Seq(StructField("v", DoubleType, nullable = false),
         StructField("cw", LongType, nullable = false))))
-    graft.plans.Persists.releaseOnNextAction(spark, rdd0)
     val aggs = percents.map { p =>
       min(when(col("cw") * 100L >= lit(p.toLong) * total, col("v")))
         .as(s"p$p")

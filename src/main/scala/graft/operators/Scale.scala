@@ -231,36 +231,16 @@ object Scale {
     * sample lands — boundary quality affects only balance. Per-bucket
     * totals (bounded) collect once; the emit is a bucket-partitioned
     * window plus the broadcast prefix offset. The input is persisted
-    * around the three bounded passes and released on the next action;
-    * early release by a sibling operator costs recompute only, never
-    * correctness. */
+    * around the bounded passes and released when the caller's owner scope
+    * exits ([[graft.plans.Persists.scope]]); a caller that already knows
+    * the row count passes `knownN` and skips the count job. */
   private[graft] def cumByRange(df: DataFrame, orderCol: String,
-      cntCol: String, smallDomain: Long = 1L << 20): DataFrame = {
-    val (out, release) = cumByRangeManaged(df, orderCol, cntCol, smallDomain)
-    // armed AFTER the bounded passes — each is a Dataset action and
-    // would fire the listener mid-build (the RowNum.assign hazard)
-    graft.plans.Persists.onNextAction(df.sparkSession)(release)
-    out
-  }
-
-  /** [[cumByRange]] with CALLER-managed cache release: returns the
-    * cumulative frame plus the thunk that drops its internal persist.
-    * A multi-call composer (the x211/x218 advisors run one cumByRange
-    * per candidate key) must use this form and arm every release at the
-    * END of construction — with the self-arming [[cumByRange]], each
-    * call's internal count() action FIRES the previous call's listener,
-    * so by the time the composed query executes all but the last cache
-    * are gone and every branch re-scans the corpus from parquet
-    * (measured round 9: x211's final job carried five separate parquet
-    * scans; with deferred release it carries one). */
-  private[graft] def cumByRangeManaged(df: DataFrame, orderCol: String,
       cntCol: String, smallDomain: Long = 1L << 20,
-      knownN: Option[Long] = None)
-      : (DataFrame, () => Unit) = {
+      knownN: Option[Long] = None): DataFrame = {
     val spark = df.sparkSession
     val cached = df.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val release = () => { cached.unpersist(blocking = false); () }
+    graft.plans.Persists.onScopeEnd(() => cached.unpersist(blocking = false))
     // a caller that already knows the row count (the advisors fold every
     // set's count out of ONE gs.groupBy(__gid) action) skips the per-call
     // count() job; the value only routes between the two equivalent paths
@@ -274,9 +254,9 @@ object Scale {
       val w = Window.orderBy(col(orderCol).asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val tot = Window.partitionBy(lit(1))
-      return (cached
+      return cached
         .withColumn("cum", sum(col(cntCol)).over(w))
-        .withColumn("n", sum(col(cntCol)).over(tot)), release)
+        .withColumn("n", sum(col(cntCol)).over(tot))
     }
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val m = math.max(1L, nKeys / math.max(1, p))
@@ -293,11 +273,11 @@ object Scale {
       acc + tots.getOrElse(bkt, 0L))
     val w = Window.partitionBy(col("__bkt")).orderBy(col(orderCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    (withB
+    withB
       .withColumn("cum", sum(col(cntCol)).over(w) +
         element_at(lit(offsets.dropRight(1).toArray), col("__bkt") + 1))
       .withColumn("n", lit(offsets.last))
-      .drop("__bkt"), release)
+      .drop("__bkt")
   }
 
   /** Sort-key advisor: for each candidate layout key, how effective would
@@ -316,7 +296,7 @@ object Scale {
     * the probes; the round-8 verdict measured the per-candidate job
     * chains at ~1.8-3.8 s of pure latency). The persisted grouping-sets
     * frame is key-domain-sized per set, carries map-side partial
-    * aggregation, and is released on the consumer's first action. All
+    * aggregation, and is released when the owner scope exits. All
     * cumulative positions run through [[cumByRange]]'s partitioned
     * two-pass shape, so a UNIQUE candidate key (distinct-key frame =
     * corpus) no longer funnels the dataset through one task.
@@ -326,7 +306,6 @@ object Scale {
       probeCol: String, nBins: Int = 32, nProbes: Int = 9): DataFrame = {
     require(candidateKeys.nonEmpty && nBins >= 2 && nProbes >= 1,
       "need candidates, >=2 bins, >=1 probe")
-    val spark = df.sparkSession
     // one pass: GROUPING SETS ((k1),(k2),...,(probe)) — each single-column
     // set reproduces exactly the per-candidate groupBy it replaces, and
     // grouping_id() (bit 1 = column aggregated away, leftmost column =
@@ -348,22 +327,17 @@ object Scale {
       .agg(count(lit(1)).as("cnt"), min(col(probeCol)).as("pmin"),
         max(col(probeCol)).as("pmax"), grouping_id().as("__gid"))
       .localCheckpoint(true)
-    // internal sub-cache releases are DEFERRED to the consumer's action —
-    // see cumByRangeManaged's scaladoc for why self-arming releases
-    // would gut the caches before the composed query runs
-    val releases = scala.collection.mutable.ArrayBuffer[() => Unit]()
-    releases += releaseCheckpoint(gs)
+    graft.plans.Persists.releaseCheckpointAtScopeEnd(gs)
     // one bounded collect over the stored partitions yields every set's
-    // row count, so no cumByRangeManaged call below needs its own
-    // count() job (round 9 ran one count action per candidate + probes)
+    // row count, so no cumByRange call below needs its own count() job
+    // (round 9 ran one count action per candidate + probes)
     val gidRows = gs.groupBy(col("__gid")).agg(count(lit(1)).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // probe workload: the i/(nProbes+1) exact quantiles of probeCol
     val pv = gs.filter(col("__gid") === gidOf(probeCol))
       .select(col(probeCol).as("pv"), col("cnt"))
-    val (pcum, pvRel) = cumByRangeManaged(pv, "pv", "cnt",
+    val pcum = cumByRange(pv, "pv", "cnt",
       knownN = Some(gidRows.getOrElse(gidOf(probeCol), 0L)))
-    releases += pvRel
     val probeAggs = (1 to nProbes).map { i =>
       min(when(col("cum") * (nProbes + 1).toLong >= lit(i.toLong) * col("n"),
         col("pv"))).as(s"p_$i")
@@ -374,9 +348,8 @@ object Scale {
     val perKey = candidateKeys.map { key =>
       val counts = gs.filter(col("__gid") === gidOf(key))
         .select(col(key).as("k"), col("cnt"), col("pmin"), col("pmax"))
-      val (kcum, kRel) = cumByRangeManaged(counts, "k", "cnt",
+      val kcum = cumByRange(counts, "k", "cnt",
         knownN = Some(gidRows.getOrElse(gidOf(key), 0L)))
-      releases += kRel
       val bins = kcum
         .withColumn("bin", call_function("div",
           (col("cum") - col("cnt")) * nBins.toLong, col("n")))
@@ -395,16 +368,8 @@ object Scale {
             (col("n_bins").cast("double") * nProbes.toDouble), 6)
             .as("scan_frac"))
     }
-    // release fires on the CONSUMER'S action — the one whose analyzed
-    // plan contains this result — so interleaved session actions can no
-    // longer gut the caches before the composed query runs
-    val out = perKey.reduce(_ unionAll _)
-    graft.plans.Persists.onActionOf(out)(() => releases.foreach(_()))
-    out
+    perKey.reduce(_ unionAll _)
   }
-
-  private def releaseCheckpoint(d: DataFrame): () => Unit =
-    graft.plans.Persists.checkpointRelease(d)
 
   /** Bloom-filter advisor — the [[sortKeyAdvisor]] sibling for the OTHER
     * skipping index: if each of the `nBins` equal-count files (packed in
@@ -439,7 +404,6 @@ object Scale {
     require(candidateKeys.nonEmpty && nBins >= 2 && nProbes >= 1 &&
       bitsPerFile >= 8 && nHashes >= 1,
       "need candidates, >=2 bins, >=1 probe, >=8 bits, >=1 hash")
-    val spark = df.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
     val d = (c: Column) => c.cast(org.apache.spark.sql.types.DoubleType)
     // one pass over the corpus: single-column sets for the per-key count
@@ -460,17 +424,14 @@ object Scale {
       .groupingSets(singleSets ++ pairSets, gcols.map(col): _*)
       .agg(count(lit(1)).as("cnt"), grouping_id().as("__gid"))
       .localCheckpoint(true)
-    // deferred release — see sortKeyAdvisor / cumByRangeManaged
-    val releases = scala.collection.mutable.ArrayBuffer[() => Unit]()
-    releases += releaseCheckpoint(gs)
+    graft.plans.Persists.releaseCheckpointAtScopeEnd(gs)
     // one bounded collect: every set's row count from stored partitions
     val gidRows = gs.groupBy(col("__gid")).agg(count(lit(1)).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pv = gs.filter(col("__gid") === gidOf(probeCol))
       .select(col(probeCol).as("pv"), col("cnt"))
-    val (pcum, pvRel) = cumByRangeManaged(pv, "pv", "cnt",
+    val pcum = cumByRange(pv, "pv", "cnt",
       knownN = Some(gidRows.getOrElse(gidOf(probeCol), 0L)))
-    releases += pvRel
     val probeAggs = (1 to nProbes).map { i =>
       min(when(col("cum") * (nProbes + 1).toLong >= lit(i.toLong) * col("n"),
         col("pv"))).as(s"p_$i")
@@ -481,9 +442,8 @@ object Scale {
     val perKey = candidateKeys.map { key =>
       val counts = gs.filter(col("__gid") === gidOf(key))
         .select(col(key).as("k"), col("cnt"))
-      val (kcum, kRel) = cumByRangeManaged(counts, "k", "cnt",
+      val kcum = cumByRange(counts, "k", "cnt",
         knownN = Some(gidRows.getOrElse(gidOf(key), 0L)))
-      releases += kRel
       val bins = kcum
         .withColumn("bin", call_function("div",
           (col("cum") - col("cnt")) * nBins.toLong, col("n")))
@@ -526,10 +486,7 @@ object Scale {
           round((d(col("t_all")) + col("__fp")) /
             (lit(nProbes.toDouble) * d(col("n_bins"))), 6).as("open_frac"))
     }
-    // consumer-matched release — see sortKeyAdvisor
-    val out = perKey.reduce(_ unionAll _)
-    graft.plans.Persists.onActionOf(out)(() => releases.foreach(_()))
-    out
+    perKey.reduce(_ unionAll _)
   }
 
   /** Range-partition planner: choose split boundaries over `keyCol` for

@@ -106,8 +106,8 @@ object Selection {
     * construction: an eager fill action was measured SLOWER end-to-end
     * at bench scale (the blocking cache write costs more than it saves
     * on short documents), while lazy fill overlaps the consumer's job
-    * and still guarantees one tokenize at 100 TB. Released on the
-    * consumer's action (Persists convention).
+    * and still guarantees one tokenize at 100 TB. Released when the owner
+    * scope exits (Persists convention).
     * Returns (idCol, label, p) ordered as given.
     */
   def bowLogisticScore(docs: DataFrame, idCol: String, textCol: String,
@@ -129,6 +129,7 @@ object Selection {
       .agg(count(lit(1)).cast(DoubleType).as("tf"))
       .withColumn("x", col("tf") / col("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.plans.Persists.onScopeEnd(() => tf.unpersist(blocking = false))
     // ONE bounded action folds both scalars (every term of g is exactly
     // +-0.5, so the sum is exact); the tf cache stays lazy
     val hd = base
@@ -140,16 +141,11 @@ object Selection {
     val wtab = tf.groupBy(col("b"))
       .agg(sum((lit(0.5) - col("y")) * col("x")).as("g"))
       .select(col("b"), round(lit(-learningRate) * col("g") / nDocs, 6).as("wb"))
-    val out = tf.join(broadcast(wtab), Seq("b"))
+    tf.join(broadcast(wtab), Seq("b"))
       .groupBy(col("id"), col("y"))
       .agg(sum(col("wb") * col("x")).as("z"))
       .select(col("id").as(idCol), col("y").as("label"),
         round(lit(1.0) / (lit(1.0) + exp(-(col("z") + bias))), 6).as("p"))
-    // armed AFTER the bounded action above; fires on the CONSUMER'S own
-    // action (plan containment), so interleaved actions can't drop tf
-    graft.plans.Persists.onActionOf(out)(
-      () => { tf.unpersist(blocking = false); () })
-    out
   }
 
   /** Temperature-scaled source mixing weights (the multilingual/multi-

@@ -532,7 +532,7 @@ object Similarity {
     import spark.implicits._
     // persisted across the iters+1 bounded agg actions below — each
     // iteration's matvec re-read and re-converted the vector column from
-    // parquet (round 10); released on the consumer's own action. n rides
+    // parquet (round 10); unpersisted after the last iteration. n rides
     // the mu aggregate instead of a second full-scan count action.
     val v = df.select(asDouble(col(vecCol)).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -77,11 +77,7 @@ final class Context(
     * Counts are exact (one aggregate); materialized rows are capped. */
   def collectRowEvents(phase: String, df: DataFrame): Unit = {
     import Events._
-    val fromChannel = df
-      .select(col(RowNumCol), explode(col(EventsCol)).as("e"))
-      .select(col(RowNumCol).as("row_num"),
-        col("e.etype").as("etype"), col("e.step").as("step"),
-        col("e.message").as("message"))
+    val fromChannel = eventRows(df, col(EventsCol))
     val dropped = droppedFrames.filter(_._1 == phase).map(_._2)
     droppedFrames.filterInPlace(_._1 != phase)
     // persist around the two actions: the registered dropped-event frames

@@ -83,6 +83,17 @@ object Events {
     * errors_and_warnings.txt instead). */
   def forCheckpoint(df: DataFrame): DataFrame = df.drop(EventsCol, StatusCol)
 
+  /** One row per event in `events` (an array column of `df`), optionally
+    * only those of one etype: `(row_num, etype, step, message)` — the
+    * shape the phase-boundary drain reads. */
+  def eventRows(df: DataFrame, events: Column,
+      etype: Option[String] = None): DataFrame = {
+    val rows = df.select(col(RowNumCol).as("row_num"), explode(events).as("e"))
+    etype.fold(rows)(t => rows.filter(col("e.etype") === t))
+      .select(col("row_num"), col("e.etype").as("etype"),
+        col("e.step").as("step"), col("e.message").as("message"))
+  }
+
   /** Build one event struct. `message` may be a dynamic Column. */
   def event(etype: String, step: String, message: Column, policy: ErrorPolicy): Column =
     struct(

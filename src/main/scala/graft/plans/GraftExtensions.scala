@@ -1,10 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, IntegerLiteral}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
-import graft.functions.{DotProduct, MinhashSignature, SimhashFingerprint, VectorExpressions, WinnowFingerprints}
+import graft.functions.{BloomExpression, IvfExpressions, MinhashExpression, NgramExpression,
+  PqExpression, SimhashExpression, VectorExpressions, WinnowExpression}
 
 /** SparkSessionExtensions hook: registers graft's native expressions in the
   * session catalog so plain SQL resolves them without any Scala-side
@@ -14,37 +17,51 @@ import graft.functions.{DotProduct, MinhashSignature, SimhashFingerprint, Vector
   *
   * Wire-up: `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` on
-  * spark-submit. (The Scala-side helpers — MinhashExpression.signature
-  * etc. — self-register per session and don't need this hook; the hook
-  * exists for SQL-only entry points: thrift server, spark-sql shell,
-  * notebooks speaking pure SQL.)
+  * spark-submit. It injects exactly the builders each helper's `register`
+  * installs (MinhashExpression.signature etc. self-register per session
+  * and don't need this hook; the hook exists for SQL-only entry points:
+  * thrift server, spark-sql shell, notebooks speaking pure SQL).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(VectorExpressions.DotName),
-      new ExpressionInfo(classOf[DotProduct].getName, VectorExpressions.DotName),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinhashSignature].getName, "graft_minhash"),
-      (exprs: Seq[Expression]) => exprs(1) match {
-        case IntegerLiteral(k) => MinhashSignature(exprs(0), k)
-        case other => throw new IllegalArgumentException(
-          s"graft_minhash's second argument must be a literal int, got $other")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimhashFingerprint].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => SimhashFingerprint(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "graft_winnow"),
-      (exprs: Seq[Expression]) => (exprs(1), exprs(2)) match {
-        case (IntegerLiteral(k), IntegerLiteral(w)) =>
-          WinnowFingerprints(exprs(0), k, w)
-        case other => throw new IllegalArgumentException(
-          s"graft_winnow's k and w must be literal ints, got $other")
-      }))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.builders.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(build.getClass.getName, name), build))
+    }
+}
+
+object GraftExtensions {
+  /** How SQL text turns a native function's arguments into its expression. */
+  type Builder = Seq[Expression] => Expression
+
+  /** Every native function graft defines, by name. */
+  def builders: Seq[(String, Builder)] = Seq(VectorExpressions.builders,
+    MinhashExpression.builders, SimhashExpression.builders,
+    WinnowExpression.builders, NgramExpression.builders, PqExpression.builders,
+    IvfExpressions.builders, BloomExpression.builders).flatten
+
+  /** Register `builders` in the session's function registry (idempotent). */
+  def register(spark: SparkSession, builders: Seq[(String, Builder)]): Unit =
+    builders.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "built-in")
+    }
+
+  /** A literal int argument; `what` names it in the error
+    * (e.g. "graft_minhash's second argument"). */
+  def intLit(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be a literal int, got $other")
   }
+
+  /** A constant array<double> argument: a literal (the Column API's
+    * `lit(Array[Double])`) or a foldable expression (SQL text's
+    * `array(1.0d, 2.0d)`); `what` names it in the error. */
+  def doublesLit(e: Expression, what: String): Array[Double] =
+    (e.dataType, if (e.foldable) e.eval() else null) match {
+      case (ArrayType(DoubleType, _), v: ArrayData) => v.toDoubleArray()
+      case _ => throw new IllegalArgumentException(
+        s"$what must be a literal array<double>, got $e")
+    }
 }

@@ -1,34 +1,66 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 
-/** Deterministic persist lifecycle.
+import org.apache.spark.sql.{Dataset, SparkSession}
+
+/** Owner-scoped persist lifecycle.
   *
-  * Two-pass operators ([[RowNum.assign]],
-  * [[graft.operators.CorpusOps.packSequences]]) persist their input RDD so
-  * the upstream executes once; the blocks stay useful until the FIRST
-  * downstream action consumes the returned frame, which happens outside the
-  * operator (a query harness's write/count). Left alone they are reclaimed
-  * only when the ContextCleaner GCs the lineage — across a 50-query bench
-  * session that is a storage/GC leak that bills one query's blocks to the
-  * next (measured: r4_renumber 0.37s -> 10.3s in the round-2 driver bench
-  * with an otherwise better plan).
+  * Operators persist intermediate frames (two-pass numbering, a grouping-
+  * sets pass read by every candidate branch, a loser set anti-joined
+  * twice) that stay useful until their consumer has run. Every such cache
+  * has an owner that knows when that is: the pipeline phase that drains
+  * and checkpoints its output, the pipeline run, the harness query, the
+  * streaming micro-batch. The owner opens a [[scope]]; the operator
+  * registers its release with [[onScopeEnd]]; the scope runs every
+  * release when it exits, on success and on failure. No other action —
+  * the operator's own `count()`, a sibling operator, another thread's
+  * query — can release a cache early.
   *
-  * Callers that fully consume a frame inside one scope should use
-  * [[RowNum.withAssigned]]; harnesses that run query after query call
-  * [[releaseAll]] between queries — the query's action has completed, so
-  * every surviving block is dead weight by construction.
+  * Scopes are per thread (a plain `ThreadLocal`, so Spark's stream and
+  * broadcast threads never inherit a caller's scope) and nest: a release
+  * goes to the innermost open scope. Outside any scope a registration is
+  * dropped and the blocks stay until [[releaseAll]] or an explicit
+  * unpersist; harnesses that run query after query call [[releaseAll]]
+  * between queries — the query's action has completed, so every surviving
+  * block is dead weight by construction.
   */
 object Persists {
 
+  private val open = new ThreadLocal[mutable.ArrayBuffer[() => Unit]]
+
+  /** Run `body`; on exit, run every release registered in it, newest
+    * first. */
+  def scope[T](body: => T): T = {
+    val outer = open.get
+    val releases = mutable.ArrayBuffer.empty[() => Unit]
+    open.set(releases)
+    try body
+    finally {
+      open.set(outer)
+      releases.reverseIterator.foreach(_())
+    }
+  }
+
+  /** Register `release` with the innermost open scope on this thread; a
+    * no-op outside any scope. */
+  def onScopeEnd(release: () => Unit): Unit =
+    Option(open.get).foreach(_ += release)
+
+  /** Drop the stored partitions behind an eagerly localCheckpoint'ed
+    * frame's LogicalRDD leaf when the scope exits (the x260 greedy-cover
+    * convention); nothing if `d` is not a checkpoint leaf. */
+  def releaseCheckpointAtScopeEnd(d: Dataset[_]): Unit =
+    d.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        onScopeEnd(() => l.rdd.unpersist(blocking = false))
+      case _ =>
+    }
+
   /** Drop every persisted RDD and cached relation in the session.
     * Non-blocking: removal is async, but the blocks are immediately
-    * ineligible as live storage and the next query starts clean.
-    * Also fires-and-unregisters every still-pending deferred release
-    * ([[onNextAction]]/[[onActionOf]]) so an abandoned query's armed
-    * listener never lingers into the next query's session. */
+    * ineligible as live storage and the next query starts clean. */
   def releaseAll(spark: SparkSession): Unit = {
-    drainPending(spark)
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
@@ -38,22 +70,6 @@ object Persists {
     * no-leak invariant. */
   def livePersistedRdds(spark: SparkSession): Int =
     spark.sparkContext.getPersistentRDDs.size
-
-  /** Scope `rdd`'s persisted blocks to the FIRST Dataset action that
-    * completes after this call: a one-shot [[QueryExecutionListener]]
-    * unpersists them on `onSuccess`/`onFailure` and unregisters itself.
-    *
-    * Why this is always safe: the owner's own internal passes are raw RDD
-    * actions (collect on a mapPartitions), which do NOT go through
-    * `SQLExecution`/the listener — only the consumer's Dataset action
-    * (write, count, collect) fires it. And an unpersist is never a
-    * correctness hazard: the RDD recomputes from lineage with the same
-    * deterministic partition layout (the numbering offsets were computed
-    * once and broadcast) — early release can only cost recompute time.
-    * Listener delivery is async (listener-bus thread), so release lands
-    * milliseconds after the action rather than inside it. */
-  def releaseOnNextAction(spark: SparkSession, rdd: org.apache.spark.rdd.RDD[_]): Unit =
-    onNextAction(spark)(() => rdd.unpersist(blocking = false))
 
   /** Run `body` with session confs temporarily overridden, restoring the
     * prior values (or unsetting) on the way out. Runtime SQL confs apply at
@@ -75,78 +91,5 @@ object Persists {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  /** Run `release` once, after the first Dataset action completing after
-    * this call (success or failure). See [[releaseOnNextAction]]. */
-  def onNextAction(spark: SparkSession)(release: () => Unit): Unit =
-    armed(spark, release, _ => true)
-
-  /** Run `release` once, after the first Dataset action WHOSE analyzed
-    * plan contains `target`'s — i.e. the consumer of the frame the cache
-    * was built for, not just whichever action happens next. The round-9
-    * advisors armed first-any-action releases, so any interleaved action
-    * on the session (another thread, or the caller running anything
-    * before consuming the advisor frame) dropped the grouping-sets cache
-    * early and silently reverted every candidate branch to a parquet
-    * re-scan. Containment is checked on ANALYZED plans (pre cache
-    * substitution, pre optimization) via canonicalized `sameResult`, so
-    * any downstream wrapping — orderBy, extra projections, a count() —
-    * still matches. An early release remains a recompute cost, never a
-    * correctness hazard; a release that never fires is drained by
-    * [[releaseAll]] between harness queries. */
-  def onActionOf(target: org.apache.spark.sql.Dataset[_])(release: () => Unit): Unit = {
-    val plan = target.queryExecution.analyzed
-    armed(target.sparkSession, release,
-      qe => qe.analyzed.exists(_.sameResult(plan)))
-  }
-
-  /** Release thunk for an eagerly localCheckpoint'ed frame: drops the
-    * stored partitions behind its LogicalRDD leaf (the x260 greedy-cover
-    * convention). A no-op thunk if the frame is not a checkpoint leaf. */
-  def checkpointRelease(d: org.apache.spark.sql.Dataset[_]): () => Unit =
-    d.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        () => { l.rdd.unpersist(blocking = false); () }
-      case _ => () => ()
-    }
-
-  // pending deferred releases, so releaseAll can drain abandoned ones
-  private val pending =
-    new java.util.concurrent.ConcurrentHashMap[AnyRef, () => Unit]()
-
-  private def drainPending(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val it = pending.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); it.remove()
-      e.getValue.apply()
-      spark.listenerManager.unregister(
-        e.getKey.asInstanceOf[QueryExecutionListener])
-    }
-  }
-
-  private def armed(spark: SparkSession, release: () => Unit,
-      matches: org.apache.spark.sql.execution.QueryExecution => Boolean): Unit = {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val lm = spark.listenerManager
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener: QueryExecutionListener = new QueryExecutionListener {
-      private def done(qe: QueryExecution): Unit =
-        if (matchesSafely(qe) && fired.compareAndSet(false, true)) {
-          pending.remove(this)
-          release()
-          lm.unregister(this)
-        }
-      // a predicate failure must never mask the release forever: treat
-      // an exception while comparing plans as a match (fail-open)
-      private def matchesSafely(qe: QueryExecution): Boolean =
-        try matches(qe) catch { case scala.util.control.NonFatal(_) => true }
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = done(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = done(qe)
-    }
-    pending.put(listener, release)
-    lm.register(listener)
   }
 }

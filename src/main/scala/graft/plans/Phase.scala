@@ -204,12 +204,8 @@ final case class Phase(
       }
       // an arrived-dropped row brings its DROPPED_ROW events in `e0`, and
       // the terms are gated off for it; any other dropped row arrived clean
-      val events = lower.filter(droppedAt)
-        .select(col(Events.RowNumCol).as("row_num"),
-          explode(concat((e0 +: droppedEvents): _*)).as("e"))
-        .filter(col("e.etype") === Events.DroppedType)
-        .select(col("row_num"), col("e.etype").as("etype"),
-          col("e.step").as("step"), col("e.message").as("message"))
+      val events = Events.eventRows(lower.filter(droppedAt),
+        concat((e0 +: droppedEvents): _*), Some(Events.DroppedType))
       (casted.filter(!droppedAt).drop(FailAtCol), Some(events))
     }
   }

@@ -133,16 +133,18 @@ final class Pipeline(
           org.apache.spark.sql.functions.col(Events.RowNumCol).cast("long"))
       }
     }
-    // the LAST phase's cache serves the caller's first action on the
-    // returned frame, then it is dead weight — scope it to that action
-    // (the loop only unpersisted predecessors)
-    prevCached.foreach(c => Persists.onNextAction(spark)(() => c.unpersist(false)))
+    // the LAST phase's cache serves the caller's actions on the returned
+    // frame; the caller's scope owns it (the loop only unpersisted
+    // predecessors)
+    prevCached.foreach(c => Persists.onScopeEnd(() => c.unpersist(false)))
     Events.dropInternal(df)
   }
 
   /** One phase: run, apply policies, checkpoint, surface events, enforce
-    * failure gates (run_phase, pipeline.py:179-199). */
-  def runPhase(phase: Phase, input: DataFrame): DataFrame = {
+    * failure gates (run_phase, pipeline.py:179-199). The phase owns the
+    * caches its steps create: they are released once its output has been
+    * drained and checkpointed, or when it throws. */
+  def runPhase(phase: Phase, input: DataFrame): DataFrame = Persists.scope {
     val inputCols = input.columns.filterNot(Events.internalCols.contains).toSet
     val out0 = phase(input, context)
 
@@ -156,13 +158,8 @@ final class Pipeline(
     // collected ERRORs are retained unchanged (X4).
     val kept = if (!phase.steps.exists(_.appendsDropped)) out0 else {
       val dropped = Events.rowDropped(out0)
-      context.registerDroppedEvents(phase.name,
-        out0.filter(dropped)
-          .select(col(Events.RowNumCol).as("row_num"),
-            explode(col(Events.EventsCol)).as("e"))
-          .filter(col("e.etype") === Events.DroppedType)
-          .select(col("row_num"), col("e.etype").as("etype"),
-            col("e.step").as("step"), col("e.message").as("message")))
+      context.registerDroppedEvents(phase.name, Events.eventRows(
+        out0.filter(dropped), col(Events.EventsCol), Some(Events.DroppedType)))
       out0.filter(!dropped)
     }
     // cache: event drain + checkpoint + next phase all reuse this plan

@@ -25,13 +25,14 @@ object RowNum {
     * (per-partition offsets need every partition's count before any row can
     * be numbered). For narrow-deterministic inputs (round 10) the count
     * pass runs column-pruned and NOTHING is persisted — see
-    * [[assignImpl]]. Otherwise the input is persisted around the passes:
-    * the count pass executes the upstream ONCE and materializes it; the
-    * numbering pass reads the stored partitions instead of recomputing.
-    * The blocks are scoped to the FIRST Dataset action on the returned
-    * frame ([[Persists.onNextAction]]) — deterministic release, not
-    * ContextCleaner-when-GC'd (which leaked blocks across a 50-query bench
-    * session, billing one query's storage to the next).
+    * [[assignWithTotal]]. Otherwise the input is persisted around the
+    * passes: the count pass executes the upstream ONCE and materializes it;
+    * the numbering pass reads the stored partitions instead of recomputing.
+    * The blocks are released when the caller's owner scope exits
+    * ([[Persists.scope]]) — the phase, pipeline run or query that consumes
+    * the numbered frame — not when the ContextCleaner GCs the lineage
+    * (which leaked blocks across a 50-query bench session, billing one
+    * query's storage to the next).
     *
     * Both passes stay in COLUMNAR Dataset land (round-5 change): the
     * original implementation dropped to `df.rdd`, which converts every
@@ -39,21 +40,15 @@ object RowNum {
     * objects into the persist — 3.6 of p1's 3.7 s at sf0.1 was that
     * round-trip alone. Now the frame is Dataset-persisted (compressed
     * columnar), the count pass is a raw RDD action over
-    * `queryExecution.toRdd` (no Row boxing; raw RDD actions also do NOT
-    * fire [[Persists.onNextAction]] listeners, so an enclosing operator's
-    * armed release cannot trigger early), and the numbering pass is a pure
-    * PROJECTION: `monotonically_increasing_id()` is (partitionId << 33) +
-    * per-partition counter by contract, so decoding (pid, local index) and
-    * adding the broadcast per-partition offset yields exactly the old
+    * `queryExecution.toRdd` (no Row boxing), and the numbering pass is a
+    * pure PROJECTION: `monotonically_increasing_id()` is (partitionId << 33)
+    * + per-partition counter by contract, so decoding (pid, local index)
+    * and adding the broadcast per-partition offset yields exactly the old
     * zipWithIndex numbering — same partition layout, same in-partition
     * order, now codegen'd. Count and numbering run on the SAME cached
     * frame — a separately-built (e.g. column-pruned) plan could partition
     * rows differently, which would scramble the offsets. */
-  def assign(df: DataFrame): DataFrame = {
-    val (numbered, release, _) = assignImpl(df)
-    Persists.onNextAction(df.sparkSession)(release)
-    numbered
-  }
+  def assign(df: DataFrame): DataFrame = assignWithTotal(df)._1
 
   /** A plan whose recomputation is row-for-row stable: a WHITELISTED
     * narrow chain (scan / project / filter / generate / union / range /
@@ -90,7 +85,12 @@ object RowNum {
       plan.find(p => p.expressions.exists(e => !e.deterministic)).isEmpty
   }
 
-  private def assignImpl(df: DataFrame): (DataFrame, () => Unit, Long) = {
+  /** [[assign]] plus the TOTAL row count, for free: the numbering pass
+    * already counts every partition, so a caller that needs n (e.g. a
+    * decile boundary) must not pay a second full-scan count action
+    * (round 10: gainsTable's separate count re-evaluated its scored
+    * input once per run). */
+  def assignWithTotal(df: DataFrame): (DataFrame, Long) = {
     val withoutOld = df.drop(RowNumCol)
     // Narrow-deterministic fast path (round 10): the count pass runs on
     // the COLUMN-PRUNED plan — `select()` collapses a parquet scan to a
@@ -111,19 +111,18 @@ object RowNum {
         .mapPartitionsWithIndex((pid, it) =>
           Iterator(pid -> it.foldLeft(0L)((n, _) => n + 1)))
         .collect().toMap
-      (numberByOffsets(withoutOld, counts), () => (), counts.values.sum)
+      (numberByOffsets(withoutOld, counts), counts.values.sum)
     } else {
       val cached = withoutOld.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Persists.onScopeEnd(() => cached.unpersist(blocking = false))
       val counts = cached.queryExecution.toRdd
         // fold into a Long: Iterator.size returns Int and a >2^31-row
         // partition would overflow negative, scrambling every later offset
         .mapPartitionsWithIndex((pid, it) =>
           Iterator(pid -> it.foldLeft(0L)((n, _) => n + 1)))
         .collect().toMap
-      (numberByOffsets(cached, counts),
-        () => { cached.unpersist(blocking = false); () },
-        counts.values.sum)
+      (numberByOffsets(cached, counts), counts.values.sum)
     }
   }
 
@@ -142,28 +141,6 @@ object RowNum {
 
   def ensure(df: DataFrame): DataFrame =
     if (df.columns.contains(RowNumCol)) df else assign(df)
-
-  /** [[assign]] plus the TOTAL row count, for free: the numbering pass
-    * already counts every partition, so a caller that needs n (e.g. a
-    * decile boundary) must not pay a second full-scan count action
-    * (round 10: gainsTable's separate count re-evaluated its scored
-    * input once per run). */
-  def assignWithTotal(df: DataFrame): (DataFrame, Long) = {
-    val (numbered, release, total) = assignImpl(df)
-    Persists.onNextAction(df.sparkSession)(release)
-    (numbered, total)
-  }
-
-  /** Eager-consumer variant: number, run `f`, then DROP the persisted
-    * blocks deterministically (assign's persist is otherwise reclaimed
-    * only when the ContextCleaner GCs the frame's lineage — fine for
-    * short-lived query frames, wasteful when the caller fully consumes
-    * the numbered frame inside one action, e.g. a collect). */
-  def withAssigned[T](df: DataFrame)(f: DataFrame => T): T = {
-    val (numbered, release, _) = assignImpl(df)
-    try f(numbered)
-    finally release()
-  }
 
   /** Number rows of `appended` after the current max of `existing`
     * (reference phase.py:120-124: new rows numbered after current max). */

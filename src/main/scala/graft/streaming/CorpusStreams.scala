@@ -64,16 +64,18 @@ object CorpusStreams {
     * corpus sink AND folds their fingerprints/band buckets into the
     * history indexes, so the next trigger (or night) dedups against an
     * up-to-date snapshot. A spec gates each micro-batch's survivors
-    * against the batch pipeline's output on the same data. */
+    * against the batch pipeline's output on the same data. Each
+    * micro-batch owns the caches its stages create: they are released
+    * once `writeBatch` has consumed the survivors. */
   def nightlyIngestStream(docs: DataFrame, history: DataFrame,
       minTokens: Int = 8, threshold: Double = 0.8)(
       writeBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     val q = docs.writeStream
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(
+        graft.plans.Persists.scope(writeBatch(
           graft.examples.IncrementalIngest.run(batch, history, minTokens, threshold),
-          batchId)
+          batchId))
       }
       .start()
     q.processAllAvailable()

@@ -66,15 +66,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(out == Map(3L -> 3L, 20L -> 2L))
   }
 
-  test("no persisted blocks survive the consumer's first action (either path)") {
+  test("no persisted blocks survive the owner's scope (either path)") {
+    Persists.releaseAll(spark)
     for (max <- Seq(ConnectedComponents.SmallGraphMaxEdges, 0L)) {
-      val df = ConnectedComponents.labels(Seq((1L, 2L)).toDF("a", "b"), "a", "b",
-        smallGraphMax = max)
-      df.count()
-      // listener delivery is async — poll like PersistsSpec does
-      val deadline = System.nanoTime() + 5000L * 1000 * 1000
-      while (Persists.livePersistedRdds(spark) > 0 && System.nanoTime() < deadline)
-        Thread.sleep(50)
+      Persists.scope {
+        ConnectedComponents.labels(Seq((1L, 2L)).toDF("a", "b"), "a", "b",
+          smallGraphMax = max).count()
+      }
       assert(Persists.livePersistedRdds(spark) == 0, s"smallGraphMax=$max")
     }
   }

@@ -120,6 +120,20 @@ class EvaluationSpec extends SparkSpec {
     assert(out(10L)._5 == 1.0)
   }
 
+  test("gainsTable: fewer than 10 rows throws, and its numbering cache is released when the owner scope exits") {
+    import spark.implicits._
+    import graft.plans.Persists
+    Persists.releaseAll(spark)
+    val df = (1 to 9).map(i => (i.toLong, i.toDouble, i % 2 == 0)).toDF("id", "q", "y")
+    Persists.scope {
+      intercept[IllegalArgumentException](
+        graft.operators.Evaluation.gainsTable(df, "id", "q", "y"))
+      // the sorted input was persisted for numbering before the size check
+      assert(Persists.livePersistedRdds(spark) == 1)
+    }
+    assert(Persists.livePersistedRdds(spark) == 0)
+  }
+
   test("mrr: reciprocal of the true top-1's approx rank; absent scores 0") {
     import spark.implicits._
     val exact = Seq((1L, 10L, 1), (1L, 11L, 2),

@@ -53,4 +53,44 @@ class ExtensionsSpec extends SparkSpec {
     new graft.plans.GraftExtensions()
       .apply(new org.apache.spark.sql.SparkSessionExtensions)
   }
+
+  test("every native function resolves from SQL text in a session that has only the extension installed") {
+    import org.apache.spark.sql.SparkSession
+    val bloom = {
+      val bf = org.apache.spark.util.sketch.BloomFilter.create(16)
+      bf.putBinary("a".getBytes("UTF-8"))
+      val out = new java.io.ByteArrayOutputStream()
+      bf.writeTo(out)
+      out.toByteArray.map("%02X".format(_)).mkString
+    }
+    val calls = Map(
+      "graft_dot" -> "graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))",
+      "graft_minhash" -> "graft_minhash(split('a b c', ' '), 4)",
+      "graft_simhash" -> "graft_simhash(split('a b c', ' '))",
+      "graft_simhash_nn" -> "graft_simhash_nn(split('a b c', ' '))",
+      "graft_winnow" -> "graft_winnow(split('a b c d e f', ' '), 3, 4)",
+      "graft_ngrams" -> "graft_ngrams(split('a b c d', ' '), 2)",
+      "graft_pq_encode" ->
+        "graft_pq_encode(array(1.0d, 2.0d), array(0.0d, 0.0d, 1.0d, 2.0d), 1, 2)",
+      "graft_ivf_assign" ->
+        "graft_ivf_assign(array(1.0d, -1.0d), array(1.0d, 1.0d, -1.0d, 1.0d), 2)",
+      "graft_ivf_probes" ->
+        "graft_ivf_probes(array(1.0d, -1.0d), array(1.0d, 1.0d, -1.0d, 1.0d), 2, 1)",
+      "graft_bloom_contains" -> s"graft_bloom_contains('a', X'$bloom')")
+    assert(graft.plans.GraftExtensions.builders.map(_._1).toSet === calls.keySet)
+    // a NEW session on the running context: getOrCreate only builds one
+    // (and applies the extension) when no active or default session exists
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = try SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).getOrCreate()
+      finally { SparkSession.setDefaultSession(shared); SparkSession.setActiveSession(shared) }
+    assert(s ne shared)
+    calls.foreach { case (name, call) =>
+      val row = s.sql(s"SELECT $call AS v").head()
+      assert(!row.isNullAt(0), name)
+    }
+    assert(s.sql(s"SELECT graft_bloom_contains('a', X'$bloom')").head().getBoolean(0))
+    assert(s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").head().getDouble(0) == 11.0)
+  }
 }

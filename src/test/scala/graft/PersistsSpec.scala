@@ -3,28 +3,21 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.plans.{Events, Persists, RowNum}
 
-/** No-leak invariant for two-pass operators: persisted blocks are scoped to
-  * the first Dataset action on the operator's output
-  * ([[Persists.releaseOnNextAction]]) instead of waiting for the
-  * ContextCleaner — the round-2 driver bench measured one query's leaked
-  * blocks billing the NEXT queries 2-15x (r4_renumber 0.37s -> 10.3s). */
+/** No-leak invariant for operators that persist: their blocks belong to
+  * the owner's scope ([[Persists.scope]]) and are released when it exits,
+  * instead of waiting for the ContextCleaner — the round-2 driver bench
+  * measured one query's leaked blocks billing the NEXT queries 2-15x
+  * (r4_renumber 0.37s -> 10.3s). Every test here already runs inside its
+  * own scope (SparkSpec), so each check opens an inner one. */
 class PersistsSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-
-  /** Listener delivery is async (listener-bus thread) — poll briefly. */
-  private def awaitNoLive(maxMs: Long = 15000): Unit = {
-    val deadline = System.nanoTime() + maxMs * 1000000L
-    while (Persists.livePersistedRdds(spark) > 0 && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(Persists.livePersistedRdds(spark) === 0)
-  }
 
   private def clean(): Unit = {
     Persists.releaseAll(spark) // baseline: earlier suites share this JVM/session
     assert(Persists.livePersistedRdds(spark) === 0)
   }
 
-  test("RowNum.assign: narrow inputs persist nothing (round-10 fast path); shuffled inputs persist between passes and release on the first action") {
+  test("RowNum.assign: narrow inputs persist nothing (round-10 fast path); shuffled inputs persist between passes and release when the owner scope exits") {
     clean()
     // narrow-deterministic input: the count pass is column-pruned and NO
     // cache is created — recomputation is row-stable by construction
@@ -40,37 +33,44 @@ class PersistsSpec extends SparkSpec {
     }
     // shuffled input: within-partition order is only stable across actions
     // if both passes read one materialization — the persist must be there,
-    // scoped to the first action
-    val shuffled = df.repartition(4)
-    val n2 = RowNum.assign(shuffled)
-    assert(Persists.livePersistedRdds(spark) === 1) // alive between passes
-    assert(n2.count() === 10000L)
-    awaitNoLive()
-    // early release is correct: the frame still evaluates after the blocks
-    // are gone (lineage recompute, same broadcast offsets)
+    // and it outlives every action inside the scope
+    val n2 = Persists.scope {
+      val n = RowNum.assign(df.repartition(4))
+      assert(Persists.livePersistedRdds(spark) === 1) // alive between passes
+      assert(n.count() === 10000L)
+      assert(n.count() === 10000L)
+      assert(Persists.livePersistedRdds(spark) === 1)
+      n
+    }
+    assert(Persists.livePersistedRdds(spark) === 0)
+    // the frame still evaluates after the blocks are gone (lineage
+    // recompute, same broadcast offsets)
     assert(n2.count() === 10000L)
   }
 
-  test("packSequences blocks are released by the first action on the output") {
+  test("packSequences blocks are released when the owner scope exits") {
     clean()
     val df = spark.range(0, 1000).toDF("doc_id").withColumn("n_tokens", lit(7))
-    val packed = graft.operators.CorpusOps.packSequences(df, "doc_id", "n_tokens", 64)
-    assert(packed.count() === 1000L)
-    awaitNoLive()
+    Persists.scope {
+      val packed = graft.operators.CorpusOps.packSequences(df, "doc_id", "n_tokens", 64)
+      assert(packed.count() === 1000L)
+      assert(Persists.livePersistedRdds(spark) === 1)
+    }
+    assert(Persists.livePersistedRdds(spark) === 0)
   }
 
   test("every ranked gated query leaves no blocks after its action") {
     clean()
     for (name <- Seq("b3_sort_by", "r4_renumber", "x19_pack_sequences")) {
-      SparkEntry.queries(name)(spark, sfDir).count()
-      awaitNoLive()
+      Persists.scope(SparkEntry.queries(name)(spark, sfDir).count())
+      assert(Persists.livePersistedRdds(spark) === 0, name)
     }
   }
 
   test("curation e1 query leaves no blocks after its action") {
     clean()
-    SparkEntry.queries("e1_curation_pipeline")(spark, sfDir).count()
-    awaitNoLive()
+    Persists.scope(SparkEntry.queries("e1_curation_pipeline")(spark, sfDir).count())
+    assert(Persists.livePersistedRdds(spark) === 0)
   }
 
   test("releaseAll drops persisted RDDs and cached relations immediately") {
@@ -83,35 +83,111 @@ class PersistsSpec extends SparkSpec {
     assert(Persists.livePersistedRdds(spark) === 0)
   }
 
-  test("onActionOf fires only on the CONSUMER'S action — interleaved actions leave the release armed") {
-    clean()
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val target = spark.range(0, 64).toDF("id")
-      .withColumn("y", col("id") * 3)
-    Persists.onActionOf(target)(() => fired.set(true))
-    // an UNRELATED action must not fire the consumer-matched release —
-    // this was exactly the round-9 hazard: any interleaved session
-    // action dropped the advisors' caches mid-construction
-    spark.range(1).count()
-    Thread.sleep(400) // listener delivery is async; give it time to misfire
-    assert(!fired.get(), "unrelated action fired a consumer-matched release")
-    // a DOWNSTREAM action on the target (wrapped in more operators —
-    // containment, not equality) fires it
-    target.groupBy().agg(sum(col("y"))).count()
-    val deadline = System.nanoTime() + 15000L * 1000000L
-    while (!fired.get() && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(fired.get(), "consumer action did not fire the release")
+  test("scopes nest and run their releases newest first; outside any scope a registration is dropped") {
+    val order = scala.collection.mutable.ArrayBuffer.empty[String]
+    Persists.scope {
+      Persists.onScopeEnd(() => order += "outer")
+      Persists.scope {
+        Persists.onScopeEnd(() => order += "inner1")
+        Persists.onScopeEnd(() => order += "inner2")
+      }
+      assert(order === Seq("inner2", "inner1"))
+    }
+    assert(order === Seq("inner2", "inner1", "outer"))
+    // a fresh thread has no scope, not even its creator's
+    val t = new Thread(() => Persists.onScopeEnd(() => order += "orphan"))
+    t.start(); t.join()
+    assert(order === Seq("inner2", "inner1", "outer"))
   }
 
-  test("releaseAll drains still-armed deferred releases so abandoned queries never leak listeners") {
+  test("a release belongs to its thread's scope: another thread's action never fires it; the scope's exit does, also when the body throws") {
+    import java.util.concurrent.CountDownLatch
+    import java.util.concurrent.atomic.AtomicInteger
     clean()
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val target = spark.range(0, 32).toDF("id").withColumn("z", col("id") + 1)
-    Persists.onActionOf(target)(() => fired.set(true))
-    // the query is abandoned — no consumer action ever runs; the harness
-    // boundary (releaseAll between queries) must fire-and-unregister it
-    Persists.releaseAll(spark)
-    assert(fired.get(), "releaseAll did not drain the armed release")
+    val fired = new AtomicInteger(0)
+    val registered = new CountDownLatch(1)
+    val otherActed = new CountDownLatch(1)
+    @volatile var seenInScope = (-1, -1)
+    val a = new Thread(() => Persists.scope {
+      val numbered = RowNum.assign(spark.range(0, 1000).toDF("id").repartition(4))
+      Persists.onScopeEnd(() => fired.incrementAndGet())
+      assert(numbered.count() === 1000L)
+      registered.countDown()
+      otherActed.await()
+      seenInScope = (fired.get(), Persists.livePersistedRdds(spark))
+    })
+    a.start()
+    assert(registered.await(120, java.util.concurrent.TimeUnit.SECONDS))
+    // thread B (this one) runs Dataset actions while A's scope is open
+    assert(spark.range(10).count() === 10L)
+    spark.range(5).toDF("i").collect()
+    otherActed.countDown()
+    a.join()
+    assert(seenInScope === ((0, 1)), "B's actions released A's blocks")
+    assert(fired.get() === 1)
+    assert(Persists.livePersistedRdds(spark) === 0)
+
+    val ex = intercept[IllegalStateException](Persists.scope {
+      RowNum.assign(spark.range(0, 100).toDF("id").repartition(2))
+      Persists.onScopeEnd(() => fired.incrementAndGet())
+      throw new IllegalStateException("boom")
+    })
+    assert(ex.getMessage === "boom")
+    assert(fired.get() === 2)
+    assert(Persists.livePersistedRdds(spark) === 0)
+  }
+
+  test("two pipelines run concurrently on one session match their serial runs, and leave no blocks once both scopes close") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    import graft.plans.{Phase, Pipeline}
+    import graft.sources.Format
+    clean()
+    val root = Files.createTempDirectory("graft_concurrent")
+    val header = "employeeNumber,firstName,lastName,payType,paidPer,payRate,bonusAmount,Status\n"
+    val sources = Seq(
+      header + "1,Benjamin,Sisko,salary,Year,188625,30000,Active\n" +
+        ",None,Garak,salary,Year,100000,,Inactive\n" +
+        "3,Julian,Bashir,salary,Year,142880,25000,Active\n" +
+        "4,Miles,O'Brien,hourly,Hour,-5,,Active\n",
+      header + "7,Jadzia,Dax,salary,Year,150000,10000,Active\n" +
+        "8,Worf,Mogh,weekly,Week,3000,,Active\n" +
+        "9,Odo,None,monthly,Month,9000,100,Active\n" +
+        ",Quark,None,daily,Day,300,,Inactive\n")
+      .zipWithIndex.map { case (csv, i) => Files.writeString(root.resolve(s"in$i.csv"), csv) }
+    // the third phase renumbers: a sorted frame numbered through the
+    // persist path, so each phase scope owns a cache
+    val phases = graft.examples.Employees.phases :+ Phase("Renumber", renumber = true)
+    def runInto(dir: String, src: Path): Unit = Persists.scope {
+      val pipe = new Pipeline(spark, phases, root.resolve(dir).toString, src.toString,
+        saveFormat = Format.Csv, errorPolicy = graft.plans.ErrorPolicy.Warn)
+      pipe.run().count()
+    }
+    // every output file of a run, as sorted lines (part-file names and
+    // order carry no meaning)
+    def outputs(dir: String): Map[String, Seq[String]] =
+      Files.list(root.resolve(dir)).iterator().asScala.toSeq.map { p =>
+        val lines =
+          if (Files.isDirectory(p))
+            Files.list(p).iterator().asScala.toSeq
+              .filter(_.getFileName.toString.startsWith("part-"))
+              .flatMap(f => Files.readAllLines(f).asScala).sorted
+          else Files.readAllLines(p).asScala.toSeq
+        p.getFileName.toString -> lines
+      }.toMap
+    sources.zipWithIndex.foreach { case (src, i) => runInto(s"serial$i", src) }
+    val threads = sources.zipWithIndex.map { case (src, i) =>
+      val t = new Thread(() => runInto(s"concurrent$i", src))
+      t.start(); t
+    }
+    threads.foreach(_.join())
+    sources.indices.foreach { i =>
+      val serial = outputs(s"serial$i")
+      assert(serial.contains("errors_and_warnings.txt") &&
+        serial.contains("Renumber_output.csv"), serial.keys)
+      assert(outputs(s"concurrent$i") === serial, s"pipeline $i")
+    }
+    assert(Persists.livePersistedRdds(spark) === 0)
   }
 
   test("a phase that throws releases its own cache and its predecessor's: zero-row and collected-error gates") {

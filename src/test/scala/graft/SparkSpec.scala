@@ -1,10 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one per suite via lazy val (JVM-wide getOrCreate). */
+/** Shared session: one per suite via lazy val (JVM-wide getOrCreate).
+  * Each test runs in its own [[graft.plans.Persists.scope]]: the caches
+  * its operators register are released when the test ends. */
 trait SparkSpec extends AnyFunSuite {
+  override def withFixture(test: NoArgTest): Outcome =
+    graft.plans.Persists.scope(super.withFixture(test))
+
   lazy val spark: SparkSession = {
     val b = SparkSession.builder()
       .master("local[4]")
