@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.tools.Harness
+import graft.tools.Harness.jsonString
 
 /** Benchmark main: every SparkEntry query at SPARK_GRAFT_SF_DIR, one JSON
   * line to stdout AND to a file (SPARK_GRAFT_BENCH_OUT, default
@@ -18,23 +20,22 @@ import org.apache.spark.sql.SparkSession
   * fresh driver-mode JVMs (~30% aggregate overstatement). Chunking
   * bounds any residual cross-query contamination to 15 same-chunk
   * neighbors and makes the recorded artifact agree with fresh-JVM
-  * truth. SPARK_GRAFT_BENCH_FORK=0 forces the old inline sweep;
-  * SPARK_GRAFT_BENCH_ONLY (builder-side bisection) implies it.
+  * truth. SPARK_GRAFT_BENCH_ONLY (a comma-separated query list) selects
+  * the inline sweep over the named queries; each child gets its chunk
+  * this way. A JVM whose classpath cannot be reused also runs inline.
   *
   * Inline-mode self-defense (per child): each query runs
   * SPARK_GRAFT_BENCH_REPS times (default 3) and reports the MIN, and
-  * after every rep all persisted RDDs and cached relations are dropped
-  * ([[graft.plans.Persists.releaseAll]]) — two-pass operators persist
-  * their input around the numbering passes, and without the release one
-  * query's blocks bill the next query's time (the round-2 driver bench
-  * measured a contiguous 2-15x bulge from exactly this).
+  * every rep is a [[Harness.timed]] step, which drops all persisted RDDs
+  * and cached relations after it — without the release one query's
+  * blocks bill the next query's time (the round-2 driver bench measured a
+  * contiguous 2-15x bulge from exactly this).
   */
 object Bench {
 
   def main(args: Array[String]): Unit = {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val forkRequested = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") != "0"
     // forking re-launches this class with the parent's own classpath; that
     // only works when the JVM was started with the real app classpath
     // (sbt run/fork=true and spark-submit both do this). A launcher-jar
@@ -43,7 +44,7 @@ object Bench {
     val forkable = cp != null && cp.contains("spark-sql") &&
       new java.io.File(new java.io.File(
         System.getProperty("java.home"), "bin"), "java").canExecute
-    if (forkRequested && only.isEmpty && forkable) runForked(cp)
+    if (only.isEmpty && forkable) runForked(cp)
     else runInline(only)
   }
 
@@ -59,21 +60,13 @@ object Bench {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private def writeLine(ok: Seq[(String, Double)],
       errors: Seq[(String, String)], sfDir: String): Unit = {
-    val qs = ok.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+    val qs = ok.map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => jsonString(k) + ":" + jsonString(v) }.mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"failed":${errors.size},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"failed":${errors.size},"sf":${jsonString(sfDir)}}"""
     println(line)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
     // a failed write is logged, never thrown: stdout still carries the line
@@ -91,9 +84,8 @@ object Bench {
     // still lands in SPARK_GRAFT_BENCH_OUT — this line only guarantees the
     // totals survive any tail window. Addition-only; no timing semantics.
     // an unparsable SPARK_GRAFT_CPUS reports null rather than breaking the line
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold("4")(_.trim.toIntOption.fold("null")(_.toString))
-    val summary = s"""{"total_sec":$total,"n":${ok.size},"failed":${errors.size},"sf":${jstr(sfDir)},"cpus":$cpus,"result_file":${jstr(outPath)}}"""
+    val cpus = Harness.cpus.trim.toIntOption.fold("null")(_.toString)
+    val summary = s"""{"total_sec":$total,"n":${ok.size},"failed":${errors.size},"sf":${jsonString(sfDir)},"cpus":$cpus,"result_file":${jsonString(outPath)}}"""
     println(summary)
     // the same line as a file next to the full artifact
     write("bench_summary.json",
@@ -118,13 +110,6 @@ object Bench {
     * under positional grouping). Within a chunk, execution order stays
     * alphabetical, which is likewise append-stable. */
   private def runForked(cp: String): Unit = {
-    // the pre-round-9 positional-chunk knob is gone; fail loudly rather
-    // than silently handing an old invocation the 24-bucket default
-    sys.env.get("SPARK_GRAFT_BENCH_CHUNK").foreach { v =>
-      System.err.println(s"[bench] WARNING: SPARK_GRAFT_BENCH_CHUNK=$v " +
-        "is ignored (chunking is content-hashed since round 9); " +
-        "set SPARK_GRAFT_BENCH_BUCKETS to control bucket count")
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val numBuckets = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUCKETS", "24").toInt
     val mem = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
@@ -154,7 +139,6 @@ object Bench {
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_BENCH_ONLY", chunk.mkString(","))
       pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.getAbsolutePath)
-      pb.environment().put("SPARK_GRAFT_BENCH_FORK", "0")
       pb.redirectErrorStream(true)
       pb.redirectOutput(log)
       val t0 = System.nanoTime()
@@ -188,20 +172,11 @@ object Bench {
   /** One JVM, one session, the named queries (or all), rep-min timing. */
   private def runInline(only: Option[Set[String]]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm up codegen/classloading so the first timed query isn't charged
-    // for session startup
-    spark.range(1000).selectExpr("sum(id)").collect()
-    SparkEntry.queries("q1_pricing_summary")(spark, sfDir).count()
-    graft.plans.Persists.releaseAll(spark)
+    val spark = Harness.session("graft-bench")
+    // a real query too, so the first timed query isn't charged for the
+    // table reads' first-use costs
+    Harness.timed(spark)(SparkEntry.queries("q1_pricing_summary")(spark, sfDir).count())
     // A failed rep must never masquerade as a fast time (round-4 incident:
     // analysis errors were swallowed and 17 broken queries "ran" in 0.05 s).
     // Failed queries are excluded from `queries`/total, reported under
@@ -219,16 +194,12 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
       var err: Option[String] = None
-      def rep(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+      def rep(): Double = Harness.timed(spark) {
+        try fn(spark, sfDir).count() catch { case e: Throwable =>
           err = Some((e.getClass.getSimpleName + ": " +
             Option(e.getMessage).getOrElse("")).replaceAll("\\s+", " ").take(300))
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.plans.Persists.releaseAll(spark)
-        dt
-      }
+      }._2
       var times = (1 to reps).map(_ => rep()).toVector
       while (err.isEmpty && times.length < maxReps &&
           times.last < times.dropRight(1).min * 0.97) {

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.tools.Harness
 
 /** Scaling-trend harness (opt-in; NOT part of the bench or the gate):
   * replicates the sf tables 1x/2x/4x/... with content perturbed so corpora
@@ -58,15 +60,7 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 4)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect() // warm codegen
+    val spark = Harness.session("graft-stress")
 
     for (m <- mults) {
       val docs = replicateDocs(Tables.load(spark, sfDir, "documents"), m)
@@ -921,16 +915,10 @@ object Stress {
       // round-5 runs of identical code.
       val reps = sys.env.getOrElse("SPARK_GRAFT_STRESS_REPS", "1").toInt
       for ((name, run) <- ops if only.forall(_.contains(name))) {
-        var rows = 0L
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          rows = run()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.plans.Persists.releaseAll(spark)
-          dt
-        }
+        val runs = (1 to reps).map(_ => Harness.timed(spark)(run()))
+        val (rows, sec) = (runs.last._1, runs.map(_._2).min)
         println(s"""{"op":"$name","mult":$m,"docs":$nDocs,"events":$nEvents,""" +
-          s""""out_rows":$rows,"sec":${math.round(times.min * 1000) / 1000.0}}""")
+          s""""out_rows":$rows,"sec":${math.round(sec * 1000) / 1000.0}}""")
       }
     }
     spark.stop()

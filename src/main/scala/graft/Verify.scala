@@ -1,6 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import graft.tools.Harness
+import graft.tools.Harness.jsonString
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,14 +13,7 @@ object Verify {
     // the named queries (the driver always calls with exactly two args)
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
     def selected(name: String): Boolean = only.isEmpty || only.contains(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A query that throws must be loudly visible in the artifact, not just
     // stderr — in round 4, 17 formerly-green queries silently vanished from
@@ -25,35 +22,24 @@ object Verify {
     // nonzero so a dump with missing rows can never pass silently.
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        val msg = (e.getClass.getName + ": " +
-          Option(e.getMessage).getOrElse("")).replaceAll("\\s+", " ").take(500)
-        System.err.println(s"[verify] $name failed: $msg")
-        failed(name) = msg
+      // the write IS the query's materialization; the blocks a two-pass
+      // operator left behind are released after it
+      Harness.timed(spark) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          val msg = (e.getClass.getName + ": " +
+            Option(e.getMessage).getOrElse("")).replaceAll("\\s+", " ").take(500)
+          System.err.println(s"[verify] $name failed: $msg")
+          failed(name) = msg
+        }
       }
-      // the write above IS the query's materialization — any persisted
-      // blocks a two-pass operator left behind are dead weight now
-      graft.plans.Persists.releaseAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/failed_queries.json"), failJson)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

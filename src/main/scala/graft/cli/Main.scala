@@ -29,7 +29,10 @@ object Main {
         sys.error(s"Unknown pipeline '$name'; known: ${pipelines.keys.mkString(", ")}"))
   }
 
-  private def session(): SparkSession = {
+  /** The user-facing mains' session (`run`, `debug`, `diff`): master
+    * `SPARK_MASTER` (default `local[*]`), `SPARK_GRAFT_CPUS` shuffle
+    * partitions (default 32), no UI, the engine's session confs. */
+  def session(): SparkSession = {
     val b = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft")

@@ -180,13 +180,7 @@ object TableDiff {
   * cli/commands/diff.py:168, a latent bug; the rebuild exposes the rename
   * map properly via Phase.renameList.) */
 object TableDiffCli {
-  private def session() = {
-    val b = org.apache.spark.sql.SparkSession.builder()
-      .master("local[*]").appName("graft-diff")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate(); s.sparkContext.setLogLevel("WARN"); s
-  }
+  import graft.cli.Main.session
 
   def main(args: Array[String]): Unit = args.toList match {
     // reference form: `phaser diff <pipeline> <workdir>` — per-phase diffs

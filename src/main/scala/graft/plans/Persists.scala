@@ -22,8 +22,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * goes to the innermost open scope. Outside any scope a registration is
   * dropped and the blocks stay until [[releaseAll]] or an explicit
   * unpersist; harnesses that run query after query call [[releaseAll]]
-  * between queries — the query's action has completed, so every surviving
-  * block is dead weight by construction.
+  * between queries (through [[graft.tools.Harness.timed]]) — the query's
+  * action has completed, so every surviving block is dead weight by
+  * construction.
   */
 object Persists {
 

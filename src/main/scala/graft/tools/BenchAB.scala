@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{SparkEntry, Tables}
+import graft.SparkEntry
 
 /** Same-window interleaved A/B harness: time one query under two runtime
   * conf settings, alternating A,B,A,B,... in ONE session so box drift
@@ -10,7 +8,7 @@ import graft.{SparkEntry, Tables}
   * for sub-5s effects; fresh-JVM pairs on this machine drift 1.3-2x
   * within an hour).
   *
-  *   runMain graft.tools.BenchAB <query>[,<query>...] <conf=k> <valA> <valB> [reps]
+  *   runMain graft.tools.BenchAB <query>[,<query>...] <confKey> <valA> <valB> [reps]
   *
   * Prints one `[ab]` line per query: minA, minB, all reps.
   */
@@ -21,24 +19,12 @@ object BenchAB {
     val (key, va, vb) = (args(1), args(2), args(3))
     val reps = if (args.length > 4) args(4).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = Harness.session("graft-bench-ab")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       def rep(v: String): Double = {
         spark.conf.set(key, v)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.plans.Persists.releaseAll(spark)
-        dt
+        Harness.timed(spark)(fn(spark, sfDir).count())._2
       }
       val pairs = (1 to reps).map(_ => (rep(va), rep(vb)))
       val (as, bs) = (pairs.map(_._1), pairs.map(_._2))

@@ -2,20 +2,23 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
-import graft.{SparkEntry, Tables}
+import graft.SparkEntry
 
-/** Dev harness: profile SparkEntry queries for FIXED-MASS overhead — the
-  * per-query cost that does not scale with data (driver actions, job
-  * count, plan/analysis time). For each query it reports, at the best
-  * rep: wall time, time to BUILD the DataFrame (plan construction +
-  * analysis), number of Spark jobs the action triggered (every extra job
-  * beyond 1 is an internal collect/count someone could fold), stages,
-  * and tasks.
+/** Single-query harness: time SparkEntry queries and profile them for
+  * FIXED-MASS overhead — the per-query cost that does not scale with data
+  * (driver actions, job count, plan/analysis time). For each query it
+  * reports, at the best rep: wall time, time to BUILD the DataFrame (plan
+  * construction + analysis), number of Spark jobs the action triggered
+  * (every extra job beyond 1 is an internal collect/count someone could
+  * fold), stages, tasks and rows; then every rep's wall time.
   *
   *   runMain graft.tools.ProfileQuery <name>[,<name>...] [sfDir] [reps]
-  *   runMain graft.tools.ProfileQuery @top40 [sfDir] [reps]   # slowest 40 by name list below
+  *   runMain graft.tools.ProfileQuery @all [sfDir] [reps]   # every registered query
+  *
+  * `sfDir` defaults to SPARK_GRAFT_SF_DIR, then /root/testdata/sf0.1;
+  * `reps` to 3. SPARK_GRAFT_EXPLAIN=1 also prints each query's formatted
+  * plan once, after its reps.
   *
   * Output: one `[prof]` line per query, machine-greppable.
   */
@@ -31,25 +34,25 @@ object ProfileQuery {
     }
   }
 
+  private case class Rep(wall: Double, build: Double, jobs: Int, stages: Int,
+      tasks: Int, rows: Long)
+
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: ProfileQuery <q1,q2,...> [sfDir] [reps]")
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    require(args.nonEmpty, "usage: ProfileQuery <q1,q2,...|@all> [sfDir] [reps]")
+    val sfDir =
+      if (args.length > 1) args(1)
+      else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
     val names: Seq[String] =
       if (args(0) == "@all") SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
+    val spark = Harness.session("graft-profile")
+    val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
+    sc.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
@@ -57,27 +60,30 @@ object ProfileQuery {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         tasks.incrementAndGet()
     })
-    spark.range(1000).selectExpr("sum(id)").collect()
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      var best = (Double.MaxValue, 0.0, 0, 0, 0) // wall, build, jobs, stages, tasks
-      for (_ <- 1 to reps) {
+      val fn = SparkEntry.queries.getOrElse(name, sys.error(
+        s"unknown query $name; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+      val runs = (1 to reps).map { _ =>
         // let the listener bus drain so counters attribute correctly
-        drainListenerBus(spark.sparkContext)
+        drainListenerBus(sc)
         jobs.set(0); stages.set(0); tasks.set(0)
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        df.queryExecution.assertAnalyzed()
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        df.count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(spark.sparkContext)
-        graft.plans.Persists.releaseAll(spark)
-        if (wall < best._1)
-          best = (wall, tBuild, jobs.get(), stages.get(), tasks.get())
+        var build = 0.0
+        val (rows, wall) = Harness.timed(spark) {
+          val t0 = System.nanoTime()
+          val df = fn(spark, sfDir)
+          df.queryExecution.assertAnalyzed()
+          build = (System.nanoTime() - t0) / 1e9
+          df.count()
+        }
+        drainListenerBus(sc)
+        Rep(wall, build, jobs.get(), stages.get(), tasks.get(), rows)
       }
-      println(f"[prof] $name%-32s wall=${best._1}%7.3f build=${best._2}%6.3f " +
-        f"jobs=${best._3}%3d stages=${best._4}%3d tasks=${best._5}%5d")
+      val best = runs.minBy(_.wall)
+      println(f"[prof] $name%-32s wall=${best.wall}%7.3f build=${best.build}%6.3f " +
+        f"jobs=${best.jobs}%3d stages=${best.stages}%3d tasks=${best.tasks}%5d " +
+        f"rows=${best.rows}%d (all: ${runs.map(r => f"${r.wall}%.3f").mkString(", ")})")
+      // after the reps: a plan built (and cached) here never serves a rep
+      if (explain) Harness.timed(spark)(fn(spark, sfDir).explain("formatted"))
     }
     spark.stop()
   }

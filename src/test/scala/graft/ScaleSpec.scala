@@ -9,16 +9,17 @@ import graft.sources.Format
 /** Skew helpers + strict-checkpoint-compat mode. */
 class ScaleSpec extends SparkSpec {
 
+  private def withTarget[T](v: String)(body: => T): T = {
+    val prior = spark.conf.getOption("spark.graft.fanout.target")
+    spark.conf.set("spark.graft.fanout.target", v)
+    try body finally prior match {
+      case Some(p) => spark.conf.set("spark.graft.fanout.target", p)
+      case None => spark.conf.unset("spark.graft.fanout.target")
+    }
+  }
+
   test("fanOut: engages only on sub-parallel inputs, honors the conf, adds exactly one round-robin exchange") {
     import spark.implicits._
-    def withTarget[T](v: String)(body: => T): T = {
-      val prior = spark.conf.getOption("spark.graft.fanout.target")
-      spark.conf.set("spark.graft.fanout.target", v)
-      try body finally prior match {
-        case Some(p) => spark.conf.set("spark.graft.fanout.target", p)
-        case None => spark.conf.unset("spark.graft.fanout.target")
-      }
-    }
     val narrow = (1 to 100).toDF("x").coalesce(1)   // sub-parallel input
     val wide = (1 to 100).toDF("x").repartition(8)  // already-parallel input
     withTarget("4") {
@@ -35,6 +36,26 @@ class ScaleSpec extends SparkSpec {
     }
     // disabled (<= 1): always the identity — the at-scale plan shape
     withTarget("1") { assert(Scale.fanOut(narrow) eq narrow) }
+  }
+
+  // fanOut reads the input's partition count through `df.rdd`. If that
+  // planned the caller's own QueryExecution, a later `df.persist()` could
+  // not reach the already-planned frame, and its actions would recompute
+  // instead of reading the cache.
+  test("fanOut leaves the caller's frame plannable: after persist its own plan reads the cache") {
+    import spark.implicits._
+    withTarget("8") {
+      val df = (1 to 100).toDF("x").coalesce(1)
+      assert(Scale.fanOut(df).rdd.getNumPartitions == 8) // the df.rdd path ran
+      df.persist()
+      try {
+        assert(df.count() == 100)
+        assert(df.as[Int].collect().sorted.toSeq == (1 to 100))
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("InMemoryTableScan"),
+          s"expected the persisted frame to read its cache, got:\n$plan")
+      } finally df.unpersist()
+    }
   }
 
   test("cumByRange: the bucketed big-domain path equals the single-task small-domain path") {
