@@ -46,7 +46,7 @@ object SparkEntry {
     queries("j1_lookup_join")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- aggregation (TPC-H Q1 pricing summary; §2.8 J4 whole-batch agg) ----
     "q1_pricing_summary" -> { (s, dir) =>
       val li = t(s, dir, "lineitem")
@@ -4429,9 +4429,6 @@ object SparkEntry {
     }
   )
 
-  /** The x63 IVF-ADC oracle SQL — shared verbatim by x65 (the
-    * precomputed-index serving twin returns the identical result set,
-    * so both gate against one oracle). */
   /** The x105 oracle: brute query x corpus cosine, filter below the
     * dup threshold, argmax per query (ties to the lowest id), rounded
     * AFTER selection. */
@@ -4451,6 +4448,9 @@ object SparkEntry {
          SELECT query_id, cand_id AS hard_neg_id, round(cos, 6) AS cos
          FROM r WHERE rn = 1 ORDER BY query_id"""
 
+  /** The x63 IVF-ADC oracle SQL — shared verbatim by x65 (the
+    * precomputed-index serving twin returns the identical result set,
+    * so both gate against one oracle). */
   private val ivfAdcOracle: String =
     """WITH e AS (SELECT vec_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -5062,9 +5062,64 @@ object SparkEntry {
          FROM seg GROUP BY doc_id ORDER BY doc_id"""
   }
 
+  /** The nightly-ingest oracle: every stage replayed from the naive rules
+    * (fingerprint dedup, exact-jaccard cross and self pairs, recursive-CTE
+    * transitive closure). Shared by e2 (derive-everything entry point) and
+    * e3 (precomputed history indexes) — both must match it exactly. */
+  private val IngestOracleSql: String =
+      """WITH RECURSIVE
+         batch AS (SELECT doc_id, text, lang, source FROM documents WHERE doc_id % 10 <> 0),
+         hist AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
+         q AS (SELECT * FROM batch WHERE len(string_split(text, ' ')) >= 8),
+         f AS (SELECT doc_id,
+             md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+           FROM q),
+         hfp AS (SELECT DISTINCT
+             md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+           FROM hist),
+         exact AS (SELECT doc_id FROM (
+             SELECT doc_id, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
+             FROM f WHERE fp NOT IN (SELECT fp FROM hfp)) WHERE rn = 1),
+         sdoc AS (SELECT d.* FROM q d JOIN exact e USING (doc_id)),
+         w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM sdoc),
+         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
+                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
+         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+         hw AS (SELECT doc_id, string_split(text, ' ') AS ws FROM hist),
+         hsh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
+                 FROM hw, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
+         hsz AS (SELECT doc_id, count(*) AS n FROM hsh GROUP BY doc_id),
+         xc AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
+                FROM sh a JOIN hsh b USING (s) GROUP BY 1, 2),
+         xlosers AS (SELECT DISTINCT id_a AS doc_id
+                     FROM xc JOIN sz sa ON id_a = sa.doc_id
+                             JOIN hsz sb ON id_b = sb.doc_id
+                     WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+         s2 AS (SELECT * FROM sdoc WHERE doc_id NOT IN (SELECT doc_id FROM xlosers)),
+         sh2 AS (SELECT * FROM sh WHERE doc_id IN (SELECT doc_id FROM s2)),
+         sz2 AS (SELECT doc_id, count(*) AS n FROM sh2 GROUP BY doc_id),
+         i2 AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
+                FROM sh2 a JOIN sh2 b USING (s)
+                WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
+         p2 AS (SELECT id_a, id_b
+                FROM i2 JOIN sz2 sa ON id_a = sa.doc_id
+                        JOIN sz2 sb ON id_b = sb.doc_id
+                WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+         edges AS (SELECT id_a AS u, id_b AS v FROM p2
+                   UNION SELECT id_b, id_a FROM p2),
+         reach(a, b) AS (SELECT u, v FROM edges
+                         UNION
+                         SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u),
+         comp AS (SELECT a AS doc_id, least(min(b), a) AS component
+                  FROM reach GROUP BY a),
+         losers2 AS (SELECT doc_id FROM comp WHERE doc_id <> component)
+         SELECT doc_id, lang, source FROM s2
+         WHERE doc_id NOT IN (SELECT doc_id FROM losers2)
+         ORDER BY doc_id"""
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "x123_minhash_calibration" -> minhashCalibrationOracle,
     "x124_simhash_replay" -> simhashReplayOracle,
 
@@ -12615,59 +12670,4 @@ object SparkEntry {
            arg_min(name, id) AS canonical_name
          FROM m GROUP BY entity_id ORDER BY entity_id"""
   )
-
-  /** The nightly-ingest oracle: every stage replayed from the naive rules
-    * (fingerprint dedup, exact-jaccard cross and self pairs, recursive-CTE
-    * transitive closure). Shared by e2 (derive-everything entry point) and
-    * e3 (precomputed history indexes) — both must match it exactly. */
-  private val IngestOracleSql: String =
-      """WITH RECURSIVE
-         batch AS (SELECT doc_id, text, lang, source FROM documents WHERE doc_id % 10 <> 0),
-         hist AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-         q AS (SELECT * FROM batch WHERE len(string_split(text, ' ')) >= 8),
-         f AS (SELECT doc_id,
-             md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-           FROM q),
-         hfp AS (SELECT DISTINCT
-             md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-           FROM hist),
-         exact AS (SELECT doc_id FROM (
-             SELECT doc_id, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-             FROM f WHERE fp NOT IN (SELECT fp FROM hfp)) WHERE rn = 1),
-         sdoc AS (SELECT d.* FROM q d JOIN exact e USING (doc_id)),
-         w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM sdoc),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         hw AS (SELECT doc_id, string_split(text, ' ') AS ws FROM hist),
-         hsh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                 FROM hw, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         hsz AS (SELECT doc_id, count(*) AS n FROM hsh GROUP BY doc_id),
-         xc AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                FROM sh a JOIN hsh b USING (s) GROUP BY 1, 2),
-         xlosers AS (SELECT DISTINCT id_a AS doc_id
-                     FROM xc JOIN sz sa ON id_a = sa.doc_id
-                             JOIN hsz sb ON id_b = sb.doc_id
-                     WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
-         s2 AS (SELECT * FROM sdoc WHERE doc_id NOT IN (SELECT doc_id FROM xlosers)),
-         sh2 AS (SELECT * FROM sh WHERE doc_id IN (SELECT doc_id FROM s2)),
-         sz2 AS (SELECT doc_id, count(*) AS n FROM sh2 GROUP BY doc_id),
-         i2 AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                FROM sh2 a JOIN sh2 b USING (s)
-                WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         p2 AS (SELECT id_a, id_b
-                FROM i2 JOIN sz2 sa ON id_a = sa.doc_id
-                        JOIN sz2 sb ON id_b = sb.doc_id
-                WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
-         edges AS (SELECT id_a AS u, id_b AS v FROM p2
-                   UNION SELECT id_b, id_a FROM p2),
-         reach(a, b) AS (SELECT u, v FROM edges
-                         UNION
-                         SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u),
-         comp AS (SELECT a AS doc_id, least(min(b), a) AS component
-                  FROM reach GROUP BY a),
-         losers2 AS (SELECT doc_id FROM comp WHERE doc_id <> component)
-         SELECT doc_id, lang, source FROM s2
-         WHERE doc_id NOT IN (SELECT doc_id FROM losers2)
-         ORDER BY doc_id"""
 }

@@ -88,12 +88,8 @@ object BuiltinSteps {
   def filterRows(predicate: Column): Step =
     Step.PhaseAwareBatch("filter_rows", (d, ctx, phase) => {
       val keep = coalesce(predicate, lit(false))
-      ctx.registerDroppedEvents(phase,
-        d.filter(!keep).select(
-          col(Events.RowNumCol).as("row_num"),
-          lit(Events.DroppedType).as("etype"),
-          lit("filter_rows").as("step"),
-          lit("Row dropped by filter_rows predicate").as("message")))
+      ctx.registerDroppedEvents(phase, Events.droppedRows(d.filter(!keep),
+        "filter_rows", lit("Row dropped by filter_rows predicate")))
       d.filter(keep)
     })
 

@@ -94,6 +94,13 @@ object Events {
         col("e.step").as("step"), col("e.message").as("message"))
   }
 
+  /** The DROPPED_ROW event rows of `dropped` (the rows a step removes),
+    * in the [[eventRows]] shape: its row numbers, `step` and `message`
+    * (a string column or literal). */
+  def droppedRows(dropped: DataFrame, step: String, message: Column): DataFrame =
+    dropped.select(col(RowNumCol).as("row_num"), lit(DroppedType).as("etype"),
+      lit(step).as("step"), message.as("message"))
+
   /** Build one event struct. `message` may be a dynamic Column. */
   def event(etype: String, step: String, message: Column, policy: ErrorPolicy): Column =
     struct(

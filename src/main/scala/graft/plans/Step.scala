@@ -58,11 +58,7 @@ object Step {
       policy match {
         case ErrorPolicy.DropRow =>
           ctx.registerDroppedEvents(phase,
-            d.filter(fires).select(
-              col(Events.RowNumCol).as("row_num"),
-              lit(Events.DroppedType).as("etype"),
-              lit(name).as("step"),
-              message.cast("string").as("message")))
+            Events.droppedRows(d.filter(fires), name, message.cast("string")))
           d.filter(!fires)
         case _ =>
           val events = Events.append(d(Events.EventsCol), fires, etype, name, message, policy)
