@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -19,12 +19,25 @@ import org.apache.spark.sql.types._
   * arithmetic (same IEEE ops in both engines) is kept as double.
   *
   * OUTPUT typing convention: decimal aggregates are re-typed to double via
-  * a string hop (`sum.cast(string).cast(double)` / `CAST(CAST(s AS VARCHAR)
-  * AS DOUBLE)`) before leaving a query. Two rounds of driver evidence
+  * a string hop ([[gateDouble]] / `CAST(CAST(s AS VARCHAR) AS DOUBLE)`)
+  * before leaving a query. Two rounds of driver evidence
   * (CORRECTNESS_r01/r02) show the gate hasher fails DECIMAL outputs built
   * from Cast-over-sum even when rows, values, and Arrow schemas are
   * identical; double-typed outputs have a 100% pass record. The z1/z2
-  * probe pair pins this behavior per round.
+  * probe pair pins this behavior per round. The hop goes via STRING
+  * because Spark's Decimal.toDouble and DuckDB's decimal->double can
+  * differ by 1 ulp, while both parse the plain decimal string to the
+  * correctly-rounded nearest double.
+  *
+  * Oracle fragments: SQL blocks that several oracles share (the 3-gram
+  * shingle and jaccard CTEs, the connected-components closure, the IVF
+  * bucket CTEs, the DOUBLE embedding cast, the md5 user hash, the stop-word
+  * lists, and two whole oracles) have one definition each, a `private val`
+  * or, where copies differ in a threshold, CTE name or language, a
+  * `private def`, above the oracles; each oracle interpolates them. Each
+  * fragment's doc names the Spark operator it mirrors. A fragment must be
+  * defined above its first user: a `val` read before its definition is
+  * still null and would splice the text "null" into the SQL.
   */
 object SparkEntry {
 
@@ -32,6 +45,11 @@ object SparkEntry {
     Tables.load(s, dir, name)
 
   private val dec = DecimalType(18, 2)
+
+  /** The OUTPUT typing convention's string hop (object doc): decimal ->
+    * string -> double, the same Cast chain as DuckDB's
+    * `CAST(CAST(x AS VARCHAR) AS DOUBLE)`. */
+  private def gateDouble(c: Column): Column = c.cast(StringType).cast(DoubleType)
 
   /** Number the (already sorted) frame 1..n and expose it as a long-typed
     * rank column — partition-safe global ranking (range-partitioned sort +
@@ -53,13 +71,6 @@ object SparkEntry {
       val price = col("l_extendedprice").cast(DecimalType(12, 2))
       val disc  = col("l_discount").cast(DecimalType(4, 2))
       val tax   = col("l_tax").cast(DecimalType(4, 2))
-      // summation stays exact decimal (order-independent); OUTPUT columns
-      // are re-typed double-via-string: two rounds of driver evidence show
-      // the gate hasher treats DECIMAL outputs from a Cast-over-sum
-      // specially even when rows/values/schema are identical, while
-      // double-typed aggregates have a 100% pass record. The string hop
-      // avoids the 1-ulp decimal->double divergence between engines.
-      def d(c: org.apache.spark.sql.Column) = c.cast(StringType).cast(DoubleType)
       li.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           sum(col("l_quantity").cast(DecimalType(12, 2))).as("dq"),
@@ -68,12 +79,12 @@ object SparkEntry {
           sum(price * (lit(1).cast(DecimalType(3, 2)) - disc) * (lit(1).cast(DecimalType(3, 2)) + tax)).as("dch"),
           count(lit(1)).as("count_order"))
         .select(col("l_returnflag"), col("l_linestatus"),
-          d(col("dq")).as("sum_qty"),
-          d(col("dbp")).as("sum_base_price"),
-          d(col("ddp")).as("sum_disc_price"),
-          d(col("dch")).as("sum_charge"),
-          (d(col("dq")) / col("count_order").cast(DoubleType)).as("avg_qty"),
-          (d(col("dbp")) / col("count_order").cast(DoubleType)).as("avg_price"),
+          gateDouble(col("dq")).as("sum_qty"),
+          gateDouble(col("dbp")).as("sum_base_price"),
+          gateDouble(col("ddp")).as("sum_disc_price"),
+          gateDouble(col("dch")).as("sum_charge"),
+          (gateDouble(col("dq")) / col("count_order").cast(DoubleType)).as("avg_qty"),
+          (gateDouble(col("dbp")) / col("count_order").cast(DoubleType)).as("avg_price"),
           col("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
     },
@@ -98,7 +109,7 @@ object SparkEntry {
     //      keys and AQE picks the runtime strategy — the honest 100 TB
     //      plan (customer does NOT broadcast at scale). Ordering rides on
     //      the EXACT decimal revenue in both engines; output re-types
-    //      double-via-string per the q1 convention ----
+    //      double-via-string per the OUTPUT typing convention ----
     "q3_shipping_priority" -> { (s, dir) =>
       val cutoff = lit("1998-03-15 00:00:00").cast(TimestampNTZType)
       val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
@@ -117,7 +128,7 @@ object SparkEntry {
         .orderBy(col("rev_dec").desc, col("l_orderkey").asc)
         .limit(10)
         .select(col("l_orderkey"),
-          col("rev_dec").cast(StringType).cast(DoubleType).as("revenue"),
+          gateDouble(col("rev_dec")).as("revenue"),
           col("o_orderdate"), col("o_orderpriority"))
     },
 
@@ -148,7 +159,7 @@ object SparkEntry {
         .agg(rev.as("rev_dec"))
         .orderBy(col("rev_dec").desc, col("n_name").asc)
         .select(col("n_name"),
-          col("rev_dec").cast(StringType).cast(DoubleType).as("revenue"))
+          gateDouble(col("rev_dec")).as("revenue"))
     },
 
     "q10_returned_items" -> { (s, dir) =>
@@ -171,7 +182,7 @@ object SparkEntry {
         .orderBy(col("rev_dec").desc, col("c_custkey").asc)
         .limit(20)
         .select(col("c_custkey"), col("c_name"),
-          col("rev_dec").cast(StringType).cast(DoubleType).as("revenue"),
+          gateDouble(col("rev_dec")).as("revenue"),
           col("c_acctbal"), col("n_name"))
     },
 
@@ -209,7 +220,7 @@ object SparkEntry {
           col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
         .agg(sum(col("l_extendedprice").cast(DecimalType(12, 2)) *
             col("l_discount").cast(DecimalType(4, 2))).as("rev_dec"))
-        .select(col("rev_dec").cast(StringType).cast(DoubleType).as("revenue"))
+        .select(gateDouble(col("rev_dec")).as("revenue"))
     },
 
     // ---- TPC-H Q14 (promo effect): fact-dim join + conditional agg.
@@ -227,13 +238,12 @@ object SparkEntry {
       val p = t(s, dir, "part").select(col("p_partkey"), col("p_type"))
       val rev = col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(3, 2)) - col("l_discount").cast(DecimalType(4, 2)))
-      def d(c: org.apache.spark.sql.Column) = c.cast(StringType).cast(DoubleType)
       l.join(p, col("l_partkey") === col("p_partkey"))
         .agg(
           sum(when(col("p_type") === "PROMO", rev)
             .otherwise(lit(0).cast(DecimalType(12, 2)))).as("promo_dec"),
           sum(rev).as("total_dec"))
-        .select((lit(100.0) * d(col("promo_dec")) / d(col("total_dec")))
+        .select((lit(100.0) * gateDouble(col("promo_dec")) / gateDouble(col("total_dec")))
           .as("promo_pct"))
     },
 
@@ -256,7 +266,7 @@ object SparkEntry {
         .limit(100)
         .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
           col("o_orderdate"), col("o_totalprice"),
-          col("qty_dec").cast(StringType).cast(DoubleType).as("sum_qty"))
+          gateDouble(col("qty_dec")).as("sum_qty"))
     },
 
     // ---- TPC-H Q19 (discounted revenue, adapted: no shipmode/shipinstruct
@@ -284,7 +294,7 @@ object SparkEntry {
         .agg(sum(col("l_extendedprice").cast(DecimalType(12, 2)) *
           (lit(1).cast(DecimalType(3, 2)) -
             col("l_discount").cast(DecimalType(4, 2)))).as("rev_dec"))
-        .select(col("rev_dec").cast(StringType).cast(DoubleType).as("revenue"))
+        .select(gateDouble(col("rev_dec")).as("revenue"))
     },
 
     // ---- TPC-H Q15 (top supplier): aggregate per supplier, then select
@@ -306,7 +316,7 @@ object SparkEntry {
         .join(sup, col("l_suppkey") === col("s_suppkey"))
         .orderBy(col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"),
-          col("rev_dec").cast(StringType).cast(DoubleType).as("total_rev"))
+          gateDouble(col("rev_dec")).as("total_rev"))
     },
 
     // ---- TPC-H Q17 (small-quantity revenue): the correlated per-part
@@ -329,7 +339,7 @@ object SparkEntry {
         .filter(col("l_quantity").cast(DecimalType(12, 2)) *
           lit(5).cast(DecimalType(3, 0)) * col("n_rows") < col("s_dec"))
         .agg(sum(col("l_extendedprice").cast(DecimalType(12, 2))).as("rev_dec"))
-        .select((col("rev_dec").cast(StringType).cast(DoubleType) / lit(7.0))
+        .select((gateDouble(col("rev_dec")) / lit(7.0))
           .as("avg_yearly"))
     },
 
@@ -407,7 +417,7 @@ object SparkEntry {
           .as("rev_dec"))
         .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
         .select(col("supp_nation"), col("cust_nation"), col("l_year"),
-          col("rev_dec").cast(StringType).cast(DoubleType).as("revenue"))
+          gateDouble(col("rev_dec")).as("revenue"))
     },
 
     // ---- TPC-H Q8 (national market share): one nation's share of a
@@ -441,7 +451,6 @@ object SparkEntry {
           col("l_extendedprice"), col("l_discount"))
       val vol = col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(3, 2)) - col("l_discount").cast(DecimalType(4, 2)))
-      def d(c: org.apache.spark.sql.Column) = c.cast(StringType).cast(DoubleType)
       l.join(p, col("l_partkey") === col("p_partkey"))
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
@@ -452,7 +461,7 @@ object SparkEntry {
             .otherwise(lit(0).cast(DecimalType(12, 2)))).as("nat_dec"),
           sum(vol).as("all_dec"))
         .orderBy(col("o_year"))
-        .select(col("o_year"), (d(col("nat_dec")) / d(col("all_dec"))).as("mkt_share"))
+        .select(col("o_year"), (gateDouble(col("nat_dec")) / gateDouble(col("all_dec"))).as("mkt_share"))
     },
 
     // ---- TPC-H Q9 (product-type profit, adapted: the testdata has no
@@ -482,7 +491,7 @@ object SparkEntry {
         .agg(sum(profit).as("profit_dec"))
         .orderBy(col("nation"), col("o_year").desc)
         .select(col("nation"), col("o_year"),
-          col("profit_dec").cast(StringType).cast(DoubleType).as("sum_profit"))
+          gateDouble(col("profit_dec")).as("sum_profit"))
     },
 
     // ---- TPC-H Q11 (important stock, adapted: inventory value per part is
@@ -502,7 +511,7 @@ object SparkEntry {
         .filter(col("value_dec") * lit(10000) > col("total_dec") * lit(7))
         .orderBy(col("value_dec").desc, col("l_partkey"))
         .select(col("l_partkey"),
-          col("value_dec").cast(StringType).cast(DoubleType).as("part_value"))
+          gateDouble(col("value_dec")).as("part_value"))
     },
 
     // ---- TPC-H Q12 (ship-mode priority, adapted: no l_shipmode /
@@ -651,8 +660,8 @@ object SparkEntry {
         .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy(col("n_name").as("cntry"))
         .agg(count(lit(1)).as("numcust"),
-          sum(col("c_acctbal").cast(DecimalType(18, 2)))
-            .cast(StringType).cast(DoubleType).as("totacctbal"))
+          gateDouble(sum(col("c_acctbal").cast(DecimalType(18, 2))))
+            .as("totacctbal"))
         .orderBy(col("cntry"))
     },
 
@@ -666,8 +675,7 @@ object SparkEntry {
         .groupBy(col("r_name"), col("n_name"))
         .agg(
           count(lit(1)).as("n_customers"),
-          // exact decimal sum, double-via-string output (see q1 note)
-          sum(col("c_acctbal").cast(dec)).cast(StringType).cast(DoubleType).as("sum_acctbal"))
+          gateDouble(sum(col("c_acctbal").cast(dec))).as("sum_acctbal"))
         .orderBy(col("r_name"), col("n_name"))
     },
     "j2_agg_mapping" -> { (s, dir) =>
@@ -757,9 +765,8 @@ object SparkEntry {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       t(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
-          // exact decimal running sum, double-via-string output (q1 note)
-          sum(col("o_totalprice").cast(dec)).over(w)
-            .cast(StringType).cast(DoubleType).as("running_total"))
+          gateDouble(sum(col("o_totalprice").cast(dec)).over(w))
+            .as("running_total"))
         .orderBy(col("o_custkey"), col("o_orderkey"))
     },
 
@@ -812,8 +819,8 @@ object SparkEntry {
           // exact decimal sum internally; OUTPUT as double via string
           // (z1 rule: decimal output columns are unsafe for the driver
           // hash; the j4 convention gives the correctly-rounded double)
-          sum(coalesce(col("spend"), lit(0).cast(dec))).cast(DecimalType(38, 2))
-            .cast(StringType).cast(DoubleType).as("spend"))
+          gateDouble(sum(coalesce(col("spend"), lit(0).cast(dec)))
+            .cast(DecimalType(38, 2))).as("spend"))
         .orderBy(col("c_mktsegment"))
     },
 
@@ -821,17 +828,13 @@ object SparkEntry {
     //      moments from exact decimal sums, final arithmetic in double ----
     "j4_scalar_agg" -> { (s, dir) =>
       val v = col("value").cast(DecimalType(18, 6))
-      // decimal -> double via STRING: Spark's Decimal.toDouble and
-      // DuckDB's decimal->double can differ by 1 ulp, but both parse the
-      // plain decimal string to the correctly-rounded nearest double
-      def d(c: org.apache.spark.sql.Column) = c.cast(StringType).cast(DoubleType)
       t(s, dir, "events")
         .agg(count(lit(1)).as("n"), sum(v).as("sv"), sum(v * v).as("svv"))
         .select(col("n"),
-          (d(col("sv")) / col("n").cast(DoubleType)).as("mean"),
-          (d(col("svv")) / col("n").cast(DoubleType)
-            - (d(col("sv")) / col("n").cast(DoubleType))
-              * (d(col("sv")) / col("n").cast(DoubleType))).as("variance"))
+          (gateDouble(col("sv")) / col("n").cast(DoubleType)).as("mean"),
+          (gateDouble(col("svv")) / col("n").cast(DoubleType)
+            - (gateDouble(col("sv")) / col("n").cast(DoubleType))
+              * (gateDouble(col("sv")) / col("n").cast(DoubleType))).as("variance"))
     },
 
     // ---- D1: table diff classification over the row-number lineage ----
@@ -1042,9 +1045,8 @@ object SparkEntry {
       t(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"),
-          // exact decimal sum, double-via-string output (q1 note)
-          sum(col("value").cast(DecimalType(18, 6)))
-            .cast(StringType).cast(DoubleType).as("sum_value"))
+          gateDouble(sum(col("value").cast(DecimalType(18, 6))))
+            .as("sum_value"))
         .select(col("w.start").as("hour_start"), col("event_type"),
           col("n"), col("sum_value"))
         .orderBy(col("hour_start"), col("event_type"))
@@ -1058,9 +1060,8 @@ object SparkEntry {
       t(s, dir, "events")
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
         .agg(count(lit(1)).as("n_events"),
-          // exact decimal sum, double-via-string output (q1 note)
-          sum(col("value").cast(DecimalType(18, 6)))
-            .cast(StringType).cast(DoubleType).as("sum_value"))
+          gateDouble(sum(col("value").cast(DecimalType(18, 6))))
+            .as("sum_value"))
         .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
           col("user_id"), col("n_events"), col("sum_value"))
         .orderBy(col("user_id"), col("session_start"))
@@ -1078,8 +1079,7 @@ object SparkEntry {
           discriminator = "l_orderkey", salts = 8)
         .groupBy(col("s_name"))
         .agg(count(lit(1)).as("n_items"),
-          // exact decimal sum, double-via-string output (q1 note)
-          sum(col("l_quantity").cast(dec)).cast(StringType).cast(DoubleType).as("sum_qty"))
+          gateDouble(sum(col("l_quantity").cast(dec))).as("sum_qty"))
         .orderBy(col("s_name"))
     },
 
@@ -1226,8 +1226,7 @@ object SparkEntry {
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .rollup(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_customers"),
-          // exact decimal sum, double-via-string output (q1 note)
-          sum(col("c_acctbal").cast(dec)).cast(StringType).cast(DoubleType).as("sum_acctbal"))
+          gateDouble(sum(col("c_acctbal").cast(dec))).as("sum_acctbal"))
         .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)
     },
 
@@ -1571,8 +1570,8 @@ object SparkEntry {
     //      misreading every round (round-4 verdict #5). ----
     "z2_probe_sum_double" -> { (s, dir) =>
       t(s, dir, "nation")
-        .agg(sum(col("n_nationkey").cast(DecimalType(28, 2)))
-          .cast(StringType).cast(DoubleType).as("probe_sum"))
+        .agg(gateDouble(sum(col("n_nationkey").cast(DecimalType(28, 2))))
+          .as("probe_sum"))
     },
 
     // ---- X: DSIR importance weights (Xie et al. 2023) — hashed-unigram
@@ -1858,8 +1857,8 @@ object SparkEntry {
           col("value"))
         .cube(col("event_type"), col("hr"))
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 6)))
-            .cast(StringType).cast(DoubleType).as("sum_value"))
+          gateDouble(sum(col("value").cast(DecimalType(18, 6))))
+            .as("sum_value"))
         .orderBy(asc_nulls_first("event_type"), asc_nulls_first("hr"))
     },
 
@@ -1997,7 +1996,6 @@ object SparkEntry {
     //      (percentile_cont cutoffs both engines replicate bit-for-bit,
     //      broadcast 1-row frame + narrow clip); exact decimal sums ----
     "x87_winsorize" -> { (s, dir) =>
-      def d(c: org.apache.spark.sql.Column) = c.cast(StringType).cast(DoubleType)
       val w = graft.operators.Percentiles.winsorize(
         t(s, dir, "orders"), "o_totalprice", 0.01, 0.99)
       w.agg(
@@ -2008,7 +2006,7 @@ object SparkEntry {
         sum(col("o_totalprice").cast(DecimalType(18, 6))).as("sr"),
         sum(col("o_totalprice__w").cast(DecimalType(18, 6))).as("sw"))
         .select(col("n_below"), col("n_above"),
-          d(col("sr")).as("sum_raw"), d(col("sw")).as("sum_winsorized"))
+          gateDouble(col("sr")).as("sum_raw"), gateDouble(col("sw")).as("sum_winsorized"))
     },
 
     // ---- E: pretraining data-refresh flagship — quality gate -> token-
@@ -4429,13 +4427,123 @@ object SparkEntry {
     }
   )
 
+  // ---- Oracle fragments (see the object doc): each defined above its
+  //      first user ----
+
+  /** 3-word shingle sets of every document: `w` the space tokens, `sh`
+    * the DISTINCT space-joined 3-grams — the shingling of
+    * [[graft.operators.Dedup.ngramJaccardPairs]] (n = 3). */
+  private val docShingles: String =
+    """w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+       sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
+              FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i))"""
+
+  /** [[docShingles]] plus `sz` (shingle-set size per doc) and `inter`
+    * (shared-shingle count per ordered doc pair, id_a < id_b): the
+    * candidate side of [[graft.operators.Dedup.ngramJaccardPairs]]. */
+  private val shingleOverlap: String =
+    s"""$docShingles,
+       sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+       inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
+                 FROM sh a JOIN sh b USING (s)
+                 WHERE a.doc_id < b.doc_id GROUP BY 1, 2)"""
+
+  /** FROM/WHERE tail keeping the [[shingleOverlap]] pairs whose exact
+    * jaccard c / (n_a + n_b - c) is at least `threshold` — the verify
+    * step of [[graft.operators.Dedup.ngramJaccardPairs]]. */
+  private def jaccardAtLeast(threshold: Double): String =
+    s"""FROM inter JOIN sz sa ON id_a = sa.doc_id
+         JOIN sz sb ON id_b = sb.doc_id
+       WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= $threshold"""
+
+  /** CTE `name`(id_a, id_b): the near-dup pairs of
+    * [[graft.operators.Dedup.ngramJaccardPairs]] at threshold 0.8. */
+  private def jaccardPairs(name: String): String =
+    s"""$name AS (SELECT id_a, id_b
+         ${jaccardAtLeast(0.8)})"""
+
+  /** The x2 oracle — shared verbatim by x3 (minhash LSH, gate-proven
+    * pair-identical to the naive jaccard) and x36 (the prefix-filtered
+    * plan): each replays the naive 0.8 rule. */
+  private val ngramJaccardOracle: String =
+    s"""WITH $shingleOverlap
+       SELECT id_a, id_b, CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
+       ${jaccardAtLeast(0.8)}
+       ORDER BY id_a, id_b"""
+
+  /** CTEs `edges` (the symmetric closure of the (id_a, id_b) pair CTE
+    * `pairs`) and recursive `reach(a, b)` (every node b reachable from
+    * a); `least(min(b), a)` over reach is the component label of
+    * [[graft.operators.ConnectedComponents.labels]]. Needs WITH
+    * RECURSIVE. */
+  private def closure(pairs: String): String =
+    s"""edges AS (SELECT id_a AS u, id_b AS v FROM $pairs
+                 UNION SELECT id_b, id_a FROM $pairs),
+       reach(a, b) AS (SELECT u, v FROM edges
+                       UNION
+                       SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u)"""
+
+  /** Select tail `v` (each embedding as a DOUBLE list) FROM embeddings —
+    * the `asDouble` cast of [[graft.operators.Similarity]]. */
+  private val embeddingsAsDouble: String =
+    """list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       FROM embeddings"""
+
+  /** CTEs `bscore` (per vector and centroid ci < 16, the ±1 md5 sign
+    * pattern dotted with the first 64 dims of `e.v`) and `bucket` (the
+    * argmax ci, lowest ci on ties): [[graft.operators.Similarity.ivfAssign]]
+    * with 16 centroids over 64 dims. Reads CTE `e(vec_id, v)`. */
+  private val ivfBuckets: String =
+    """bscore AS (SELECT e.vec_id, t.ci,
+           list_sum(list_transform(range(1, 65), i ->
+             CASE WHEN (('0x' || substr(md5(CAST(t.ci AS VARCHAR) || ',' ||
+                 CAST(i - 1 AS VARCHAR)), 1, 15))::BIGINT % 2) = 0
+               THEN 1.0 ELSE -1.0 END
+             * coalesce(e.v[i], 0.0))) AS score
+         FROM e, UNNEST(range(0, 16)) t(ci)),
+       bucket AS (SELECT vec_id, ci AS bucket FROM (
+           SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
+             ORDER BY score DESC, ci ASC) AS rn FROM bscore)
+         WHERE rn = 1)"""
+
+  /** The first 15 hex digits of md5(user_id) as a hex literal: cast
+    * `::BIGINT` it is [[graft.functions.TextFunctions.md5Long]] of the
+    * user, and `% 2` of that the arm of
+    * [[graft.operators.Experiment.armOf]] with 2 arms. */
+  private val userMd5Hex: String =
+    "('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))"
+
+  /** Quoted stop words per language, the SQL twin of
+    * [[graft.functions.TextFunctions.stopwords]]. */
+  private val sqlStopwords: Map[String, String] = Map(
+    "en" -> "'the','a','of','and','to','in','is','it','for','on'",
+    "de" -> "'der','die','das','und','ist','ein','zu','mit','auf','nicht'",
+    "fr" -> "'le','la','les','et','est','un','une','dans','pour','que'")
+
+  /** The stop words of `langs`, one language per line. */
+  private def stopwordList(langs: String*): String =
+    langs.map(sqlStopwords).mkString(",\n")
+
+  /** Count of the space tokens of lower(`text`) that are stop words of
+    * `langs` — [[graft.functions.TextFunctions.stopwordHits]]. */
+  private def stopwordHits(text: String, langs: String*): String =
+    s"""len(list_filter(string_split(lower($text), ' '),
+         w -> w IN (${stopwordList(langs: _*)})))"""
+
+  /** The x13 oracle — shared verbatim by x16 (the same percentiles read
+    * from a sorted frame). */
+  private val percentilesOracle: String =
+    """SELECT quantile_cont(o_totalprice, 0.5) AS p50,
+         quantile_cont(o_totalprice, 0.9) AS p90,
+         quantile_cont(o_totalprice, 0.99) AS p99
+       FROM orders"""
+
   /** The x105 oracle: brute query x corpus cosine, filter below the
     * dup threshold, argmax per query (ties to the lowest id), rounded
     * AFTER selection. */
   private val hardNegativesOracle: String =
-    """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+    s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
          s AS (SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
              list_sum(list_transform(range(1, 65), i -> q.v[i] * c.v[i]))
                / (sqrt(list_sum(list_transform(range(1, 65), i -> q.v[i] * q.v[i])))
@@ -4452,20 +4560,9 @@ object SparkEntry {
     * precomputed-index serving twin returns the identical result set,
     * so both gate against one oracle). */
   private val ivfAdcOracle: String =
-    """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         bscore AS (SELECT e.vec_id, t.ci,
-             list_sum(list_transform(range(1, 65), i ->
-               CASE WHEN (('0x' || substr(md5(CAST(t.ci AS VARCHAR) || ',' ||
-                   CAST(i - 1 AS VARCHAR)), 1, 15))::BIGINT % 2) = 0
-                 THEN 1.0 ELSE -1.0 END
-               * coalesce(e.v[i], 0.0))) AS score
-           FROM e, UNNEST(range(0, 16)) t(ci)),
-         bucket AS (SELECT vec_id, ci AS bucket FROM (
-             SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-               ORDER BY score DESC, ci ASC) AS rn FROM bscore)
-           WHERE rn = 1),
+    s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
+         $ivfBuckets,
          probes AS (SELECT ci FROM (
              SELECT ci, row_number() OVER (ORDER BY score DESC, ci DESC)
                AS rn FROM bscore WHERE vec_id = 0)
@@ -4507,18 +4604,10 @@ object SparkEntry {
       s"min(((ha % $P) + $i * (hb % $P)) % $P) AS h$i").mkString(", ")
     val agree = (0 until 64).map(i =>
       s"CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END").mkString(" + ")
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-       sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-              FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-       sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-       inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                 FROM sh a JOIN sh b USING (s)
-                 WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
+    s"""WITH $shingleOverlap,
        p AS (SELECT id_a, id_b,
                CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-             FROM inter JOIN sz sa ON id_a = sa.doc_id
-               JOIN sz sb ON id_b = sb.doc_id
-             WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+             ${jaccardAtLeast(0.8)}),
        hs AS (SELECT doc_id,
            ('0x' || substr(md5('0|' || s), 1, 15))::BIGINT & 4294967295 AS ha,
            (('0x' || substr(md5('1|' || s), 1, 15))::BIGINT & 4294967295) | 1 AS hb
@@ -4621,17 +4710,8 @@ object SparkEntry {
            JOIN s${i - 1} x ON e.a = x.node JOIN s${i - 1} y ON e.b = y.node
            GROUP BY e.a HAVING count(*) >= $k)"""
     }.mkString(",\n         ")
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pr AS (SELECT id_a, id_b
-                FROM inter JOIN sz sa ON id_a = sa.doc_id
-                           JOIN sz sb ON id_b = sb.doc_id
-                WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+    s"""WITH $shingleOverlap,
+         ${jaccardPairs("pr")},
          es AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pr
                 UNION ALL SELECT id_b, id_a FROM pr),
          s0 AS MATERIALIZED (SELECT a AS node FROM es
@@ -4681,7 +4761,7 @@ object SparkEntry {
              FROM tc) WHERE rn = 1),
          ac AS (SELECT user_id,
              CAST(least(count(*) // 16, 5) AS VARCHAR) AS b,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          ub AS (SELECT md.a, ac.b, ac.arm FROM md JOIN ac USING (user_id)),
@@ -4724,7 +4804,7 @@ object SparkEntry {
         ">= abs(stat_obs), false) THEN 1 ELSE 0 END)"
     }.mkString("\n             + ")
     s"""WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          ag AS (SELECT CAST(count(*) AS BIGINT) AS nt,
@@ -4754,8 +4834,7 @@ object SparkEntry {
     def armRep(r: Int): String =
       s"('0x' || substr(md5('$seed|$r|' || CAST(user_id AS VARCHAR)), " +
         "1, 15))::BIGINT % 2 = 1"
-    val armObs =
-      "('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2 = 1"
+    val armObs = s"$userMd5Hex::BIGINT % 2 = 1"
     val nSums = (0 until b).map(r =>
       s"CAST(sum(CASE WHEN ${armRep(r)} THEN 1 ELSE 0 END) AS BIGINT) " +
         s"AS n$r").mkString(",\n             ")
@@ -5067,7 +5146,7 @@ object SparkEntry {
     * transitive closure). Shared by e2 (derive-everything entry point) and
     * e3 (precomputed history indexes) — both must match it exactly. */
   private val IngestOracleSql: String =
-      """WITH RECURSIVE
+      raw"""WITH RECURSIVE
          batch AS (SELECT doc_id, text, lang, source FROM documents WHERE doc_id % 10 <> 0),
          hist AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
          q AS (SELECT * FROM batch WHERE len(string_split(text, ' ')) >= 8),
@@ -5105,11 +5184,7 @@ object SparkEntry {
                 FROM i2 JOIN sz2 sa ON id_a = sa.doc_id
                         JOIN sz2 sb ON id_b = sb.doc_id
                 WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
-         edges AS (SELECT id_a AS u, id_b AS v FROM p2
-                   UNION SELECT id_b, id_a FROM p2),
-         reach(a, b) AS (SELECT u, v FROM edges
-                         UNION
-                         SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u),
+         ${closure("p2")},
          comp AS (SELECT a AS doc_id, least(min(b), a) AS component
                   FROM reach GROUP BY a),
          losers2 AS (SELECT doc_id FROM comp WHERE doc_id <> component)
@@ -5140,11 +5215,8 @@ object SparkEntry {
     // the x8 quality formula -> rank deciles via the same integer rule
     // as the Spark RowNum path; counts exact, rates single divisions
     "x155_gains_table" ->
-      """WITH h AS (SELECT doc_id, lang, text,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on',
-                        'der','die','das','und','ist','ein','zu','mit','auf','nicht',
-                        'le','la','les','et','est','un','une','dans','pour','que'))) AS sw
+      s"""WITH h AS (SELECT doc_id, lang, text,
+           ${stopwordHits("text", "en", "de", "fr")} AS sw
          FROM documents),
          q AS (SELECT doc_id,
              round((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0, 1.0) * 0.5
@@ -5212,8 +5284,7 @@ object SparkEntry {
          a AS (SELECT neighbor_id, row_number() OVER
                  (ORDER BY adist ASC, neighbor_id ASC) AS ar FROM a0),
          e2 AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+             $embeddingsAsDouble),
          s0 AS (SELECT c.vec_id AS neighbor_id,
              list_sum(list_transform(range(1, 65), i -> q.v[i] * c.v[i]))
                / (sqrt(list_sum(list_transform(range(1, 65), i -> q.v[i] * q.v[i])))
@@ -5255,11 +5326,8 @@ object SparkEntry {
 
     // the x8 quality formula, then keyed rank windows from both ends
     "x149_extremes_queue" ->
-      """WITH h AS (SELECT source, doc_id, text,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on',
-                        'der','die','das','und','ist','ein','zu','mit','auf','nicht',
-                        'le','la','les','et','est','un','une','dans','pour','que'))) AS sw
+      s"""WITH h AS (SELECT source, doc_id, text,
+           ${stopwordHits("text", "en", "de", "fr")} AS sw
          FROM documents),
          q AS (SELECT source, doc_id,
              round((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0, 1.0) * 0.5
@@ -5285,23 +5353,10 @@ object SparkEntry {
     // x69's recursive-closure + canonical-pick CTEs feed the same
     // all-integer token accounting as x140
     "x147_neardup_savings" ->
-      """WITH RECURSIVE
-         w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b
-                   FROM inter JOIN sz sa ON id_a = sa.doc_id
-                              JOIN sz sb ON id_b = sb.doc_id
-                   WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
-         edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                   UNION SELECT id_b, id_a FROM pairs),
-         reach(a, b) AS (SELECT u, v FROM edges
-                         UNION
-                         SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u),
+      s"""WITH RECURSIVE
+         $shingleOverlap,
+         ${jaccardPairs("pairs")},
+         ${closure("pairs")},
          lab AS (SELECT a AS id, least(min(b), a) AS component
                  FROM reach GROUP BY a),
          m AS (SELECT d.doc_id, coalesce(l.component, d.doc_id) AS cluster,
@@ -5324,11 +5379,8 @@ object SparkEntry {
     // the x8 quality formula -> exact DECIMAL sums per source and
     // globally -> the same fixed-order mean/sd/z formula
     "x145_source_league" ->
-      """WITH h AS (SELECT source, text,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on',
-                        'der','die','das','und','ist','ein','zu','mit','auf','nicht',
-                        'le','la','les','et','est','un','une','dans','pour','que'))) AS sw
+      s"""WITH h AS (SELECT source, text,
+           ${stopwordHits("text", "en", "de", "fr")} AS sw
          FROM documents),
          q AS (SELECT source,
              CAST(round((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0, 1.0) * 0.5
@@ -5377,8 +5429,7 @@ object SparkEntry {
          GROUP BY 1 HAVING count(*) > 1 ORDER BY lang""",
 
     "x141_embedding_norms" ->
-      """WITH ev AS (SELECT list_transform(embedding,
-             x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""WITH ev AS (SELECT $embeddingsAsDouble),
          nn AS (SELECT round(sqrt(list_sum(
              list_transform(v, x -> x * x))), 6) AS nm FROM ev)
          SELECT count(*) AS n,
@@ -5391,20 +5442,9 @@ object SparkEntry {
     // x63's sign-pattern assignment CTEs (the gate-proven scorer), then
     // list-size statistics
     "x142_ivf_balance" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         bscore AS (SELECT e.vec_id, t.ci,
-             list_sum(list_transform(range(1, 65), i ->
-               CASE WHEN (('0x' || substr(md5(CAST(t.ci AS VARCHAR) || ',' ||
-                   CAST(i - 1 AS VARCHAR)), 1, 15))::BIGINT % 2) = 0
-                 THEN 1.0 ELSE -1.0 END
-               * coalesce(e.v[i], 0.0))) AS score
-           FROM e, UNNEST(range(0, 16)) t(ci)),
-         bucket AS (SELECT vec_id, ci AS bucket FROM (
-             SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-               ORDER BY score DESC, ci ASC) AS rn FROM bscore)
-           WHERE rn = 1),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
+         $ivfBuckets,
          s AS (SELECT bucket, count(*) AS sz FROM bucket GROUP BY 1)
          SELECT count(*) AS n_buckets, CAST(min(sz) AS BIGINT) AS min_size,
            quantile_cont(sz, 0.5) AS p50_size,
@@ -5433,13 +5473,10 @@ object SparkEntry {
          FROM tt, kt""",
 
     "x137_langid_margin" ->
-      """WITH h AS (SELECT doc_id,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on'))) AS en,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('der','die','das','und','ist','ein','zu','mit','auf','nicht'))) AS de,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('le','la','les','et','est','un','une','dans','pour','que'))) AS fr
+      s"""WITH h AS (SELECT doc_id,
+           ${stopwordHits("text", "en")} AS en,
+           ${stopwordHits("text", "de")} AS de,
+           ${stopwordHits("text", "fr")} AS fr
          FROM documents)
          SELECT doc_id,
            CASE WHEN greatest(en, de, fr) = 0 THEN 'und'
@@ -5454,24 +5491,12 @@ object SparkEntry {
     // density divides exact integers, mean_score rounds the small
     // per-cluster average (the x45 precedent)
     "x138_cluster_cohesion" ->
-      """WITH RECURSIVE
-         w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
+      s"""WITH RECURSIVE
+         $shingleOverlap,
          pj AS (SELECT id_a, id_b,
                   CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-                FROM inter JOIN sz sa ON id_a = sa.doc_id
-                           JOIN sz sb ON id_b = sb.doc_id
-                WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
-         edges AS (SELECT id_a AS u, id_b AS v FROM pj
-                   UNION SELECT id_b, id_a FROM pj),
-         reach(a, b) AS (SELECT u, v FROM edges
-                         UNION
-                         SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u),
+                ${jaccardAtLeast(0.8)}),
+         ${closure("pj")},
          lab AS (SELECT a AS id, least(min(b), a) AS cluster
                  FROM reach GROUP BY a),
          szs AS (SELECT cluster, count(*) AS n_nodes FROM lab GROUP BY 1),
@@ -5495,20 +5520,9 @@ object SparkEntry {
     // dcg sums rel/log2(pos+1) at approx positions, ideal is the exact
     // list scoring itself (a closed form of k)
     "x163_ndcg" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         bscore AS (SELECT e.vec_id, t.ci,
-             list_sum(list_transform(range(1, 65), i ->
-               CASE WHEN (('0x' || substr(md5(CAST(t.ci AS VARCHAR) || ',' ||
-                   CAST(i - 1 AS VARCHAR)), 1, 15))::BIGINT % 2) = 0
-                 THEN 1.0 ELSE -1.0 END
-               * coalesce(e.v[i], 0.0))) AS score
-           FROM e, UNNEST(range(0, 16)) t(ci)),
-         bucket AS (SELECT vec_id, ci AS bucket FROM (
-             SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-               ORDER BY score DESC, ci ASC) AS rn FROM bscore)
-           WHERE rn = 1),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
+         $ivfBuckets,
          probes AS (SELECT vec_id AS query_id, ci AS bucket FROM (
              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
                ORDER BY score DESC, ci DESC) AS rn
@@ -5549,9 +5563,8 @@ object SparkEntry {
     // lowest-id seed vectors (tie-insensitive — equals the assigned
     // centroid's distance), summed per vector, then the x141 profile tail
     "x164_pq_recon_error" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
          s AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
                FROM e ORDER BY vec_id LIMIT 16),
          d AS (SELECT e.vec_id, t.j, s.c,
@@ -5569,11 +5582,8 @@ object SparkEntry {
     // the x165 oracle: x155's quality-score CTEs as p, integer decile
     // binning, the Murphy terms from exact bin sums
     "x165_brier" ->
-      """WITH h AS (SELECT doc_id, lang, text,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on',
-                        'der','die','das','und','ist','ein','zu','mit','auf','nicht',
-                        'le','la','les','et','est','un','une','dans','pour','que'))) AS sw
+      s"""WITH h AS (SELECT doc_id, lang, text,
+           ${stopwordHits("text", "en", "de", "fr")} AS sw
          FROM documents),
          v AS (SELECT
              round((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0, 1.0) * 0.5
@@ -5605,8 +5615,7 @@ object SparkEntry {
     // projection then a per-dim avg and the sign-at-component-0 /
     // norm normalization — the same arithmetic the operator runs
     "x168_power_iteration" ->
-      """WITH e AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT $embeddingsAsDouble),
          cnt AS (SELECT count(*) AS n FROM e),
          mu AS (SELECT list(m ORDER BY d) AS mu FROM (
              SELECT t.i AS d, avg(v[t.i]) AS m
@@ -5688,9 +5697,8 @@ object SparkEntry {
     // calibration nonconformity (both engines run the identical double
     // product before ceil), eval coverage + mean set size
     "x171_conformal_coverage" ->
-      """WITH scored AS (SELECT doc_id,
-             round(least(CAST(len(list_filter(string_split(lower(text), ' '),
-               w -> w IN ('the','a','of','and','to','in','is','it','for','on')))
+      s"""WITH scored AS (SELECT doc_id,
+             round(least(CAST(${stopwordHits("text", "en")}
                  AS DOUBLE)
                / CAST(greatest(len(string_split(lower(text), ' ')), 1) AS DOUBLE)
                * 5.0, 1.0), 6) AS p,
@@ -5806,9 +5814,7 @@ object SparkEntry {
     // vocab-sized frame), every sum exact, threshold exact long
     // arithmetic; df<=50 is the SEMANTIC zero-weight cap both sides
     "x184_idf_jaccard" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
+      s"""WITH $docShingles,
          nd AS (SELECT count(*) AS n FROM documents),
          wt AS (SELECT s, count(*) AS df FROM sh GROUP BY s),
          ww AS (SELECT s, CAST(round(ln(CAST(nd.n AS DOUBLE) / CAST(df AS DOUBLE))
@@ -5858,9 +5864,8 @@ object SparkEntry {
     // every C(n,2) term is integer arithmetic cast BIGINT; the final
     // expression repeats Spark's association order exactly
     "x186_cluster_ari" ->
-      """WITH e AS (SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, label,
+             $embeddingsAsDouble),
          c AS (SELECT e.label AS cl, e.v AS cv
            FROM e JOIN (SELECT label, min(vec_id) AS mv
                         FROM embeddings GROUP BY label) m
@@ -5983,17 +5988,8 @@ object SparkEntry {
     // BIGINT within/degree sums; the q_contrib doubles divide the same
     // integers in the same order as the Spark expression
     "x193_source_modularity" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b
-                   FROM inter JOIN sz sa ON id_a = sa.doc_id
-                              JOIN sz sb ON id_b = sb.doc_id
-                   WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+      s"""WITH $shingleOverlap,
+         ${jaccardPairs("pairs")},
          m AS (SELECT CAST(count(*) AS BIGINT) AS m_edges FROM pairs),
          deg AS (SELECT id, CAST(count(*) AS BIGINT) AS deg FROM
                  (SELECT id_a AS id FROM pairs
@@ -6122,12 +6118,12 @@ object SparkEntry {
     // x209: per-user integer score/outcome, desc-ranked score frame into
     // equal-count bins, cumulative qini from exact counts
     "x209_qini_curve" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS BIGINT) AS score,
              CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS BIGINT) AS y,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          bs AS (SELECT score, CAST(count(*) AS BIGINT) AS t
@@ -6230,12 +6226,12 @@ object SparkEntry {
     // x215: DiD — exact integer pre/post cell moments per arm, means and
     // the estimate in one double expression
     "x215_did" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS BIGINT) AS c_pre,
              CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS BIGINT) AS c_post,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          pa AS (SELECT arm, CAST(count(*) AS BIGINT) AS n,
@@ -6261,8 +6257,8 @@ object SparkEntry {
     // x216: power/MDE — per-arm exact moments; the z constants are the
     // SAME two 6-digit literals summed on both engines
     "x216_power_mde" ->
-      """WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+      s"""WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          pa AS (SELECT arm, CAST(count(*) AS BIGINT) AS n,
@@ -6293,8 +6289,8 @@ object SparkEntry {
     // x217: winsorized ATE — pooled p05/p95 type-1 quantiles from the
     // bounded cum frame (the x203 rank convention), clamped integer sums
     "x217_winsorized_ate" ->
-      """WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+      s"""WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          bv AS (SELECT m, CAST(count(*) AS BIGINT) AS t FROM pu GROUP BY m),
@@ -6334,12 +6330,12 @@ object SparkEntry {
     // x219: per-stratum effect terms rounded then DECIMAL-summed (no
     // double summation order); one-arm strata excluded on both engines
     "x219_post_stratified_ate" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS BIGINT) AS c_pre,
              CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS BIGINT) AS y,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          ps AS (SELECT least(c_pre, 5) AS stratum,
@@ -6375,8 +6371,8 @@ object SparkEntry {
     // x221: exact KS via integer cross-multiplication over the bounded
     // cum frame; rejected compares the ROUNDED statistic (Spark order)
     "x221_ks_arms" ->
-      """WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+      s"""WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          bv AS (SELECT m,
@@ -6564,12 +6560,12 @@ object SparkEntry {
     // convention), regression term + residual augmentations at e=1/2,
     // every fold replaying Spark's expression order
     "x232_aipw_ate" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS BIGINT) AS x,
              CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS BIGINT) AS y,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          pa AS (SELECT arm, CAST(count(*) AS BIGINT) AS n,
@@ -6838,10 +6834,10 @@ object SparkEntry {
     // (integer // division), pooled-z from exact counts, OBF boundary
     // constants forced through DOUBLE
     "x244_group_sequential" ->
-      """WITH pu AS (SELECT user_id, min(epoch_us(ts)) AS first_us,
+      s"""WITH pu AS (SELECT user_id, min(epoch_us(ts)) AS first_us,
              min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts)
                END) AS purch_us,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+             $userMd5Hex
                ::BIGINT % 2 AS arm
            FROM events GROUP BY user_id),
          rg AS (SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi
@@ -7200,20 +7196,8 @@ object SparkEntry {
     // x255: Chapman capture-recapture — the x3 exact-jaccard pair set
     // and the x4 simhash pair set replayed, then a 1-row estimate
     "x255_capture_recapture" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws
-           FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-             array_to_string(ws[i:i+2], ' ') AS s
-           FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             count(*) AS c
-           FROM sh a JOIN sh b USING (s)
-           WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pa AS (SELECT id_a, id_b
-           FROM inter JOIN sz sa ON id_a = sa.doc_id
-             JOIN sz sb ON id_b = sb.doc_id
-           WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+      s"""WITH $shingleOverlap,
+         ${jaccardPairs("pa")},
          tok AS (SELECT doc_id, w2 AS w, count(*) AS cnt FROM (
              SELECT doc_id, unnest(string_split(text, ' ')) AS w2
              FROM documents)
@@ -7320,7 +7304,7 @@ object SparkEntry {
     // x259: RMST to tau=28d per hash arm — per-arm x240 microgrid KM
     // fold, survival re-quantized to micro-units, exact micro-area sum
     "x259_rmst" ->
-      """WITH pu AS (SELECT user_id, min(ts) AS start,
+      s"""WITH pu AS (SELECT user_id, min(ts) AS start,
              min(CASE WHEN event_type = 'purchase' THEN ts END)
                AS conv_ts,
              max(ts) AS last_ts
@@ -7331,7 +7315,7 @@ object SparkEntry {
                ELSE date_diff('day', CAST(start AS DATE),
                  CAST(last_ts AS DATE)) END AS BIGINT) AS t,
              CASE WHEN conv_ts IS NOT NULL THEN 1 ELSE 0 END AS e,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+             $userMd5Hex
                ::BIGINT % 2 AS arm
            FROM pu),
          byt AS (SELECT arm, t, CAST(sum(e) AS BIGINT) AS d,
@@ -7516,9 +7500,8 @@ object SparkEntry {
     // x262: TwoNN intrinsic dimension — fixed probe panel, exact 2-NN
     // squared distances, per-probe microgrid ln(mu), MLE m/sum
     "x262_intrinsic_dim" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
          q AS (SELECT vec_id AS qid, v AS qv,
              list_sum(list_transform(range(1, 65), i -> v[i] * v[i]))
                AS qq
@@ -7741,10 +7724,10 @@ object SparkEntry {
     // x279: power / MDE — exact per-arm counts, pinned z constants,
     // the single sqrt at the edge
     "x279_power_mde_rate" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
                END) AS BIGINT) AS conv,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+             $userMd5Hex
                ::BIGINT % 2 AS arm
            FROM events GROUP BY 1),
          a AS (SELECT
@@ -7826,14 +7809,10 @@ object SparkEntry {
     // eval slice and a corpus distinct-ngram set; threshold compares
     // the UNROUNDED fraction (mirrors the Spark column reuse)
     "x281_contamination_audit" ->
-      """WITH ev AS (SELECT doc_id FROM documents
+      s"""WITH ev AS (SELECT doc_id FROM documents
            WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
              ::BIGINT % 10 = 0),
-         w AS (SELECT doc_id, string_split(text, ' ') AS ws
-           FROM documents),
-         sh AS (SELECT DISTINCT doc_id,
-             array_to_string(ws[i:i+2], ' ') AS s
-           FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
+         $docShingles,
          esh AS (SELECT sh.doc_id AS eval_id, s FROM sh
            JOIN ev ON sh.doc_id = ev.doc_id),
          csh AS (SELECT DISTINCT s FROM sh
@@ -7854,9 +7833,8 @@ object SparkEntry {
     // x282: nprobe sweep — x156's bucket/probe machinery + x99's brute
     // truth, folded to probe-rank counts; ratios of exact ints
     "x282_ivf_nprobe_advisor" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
          qs AS (SELECT vec_id FROM e
            WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
              ::BIGINT % 16 = 0),
@@ -8019,14 +7997,14 @@ object SparkEntry {
     // x268: two-covariate regression adjustment — pooled raw moments,
     // centered 2x2 solve, det=0 pins b1=b2=0 (the x198 guard)
     "x268_regression_adjust" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
                THEN value ELSE 0.0 END) AS x1,
              CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS DOUBLE) AS x2,
              sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
                THEN value ELSE 0.0 END) AS y,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+             $userMd5Hex
                ::BIGINT % 2 AS arm
            FROM events GROUP BY 1),
          pl AS (SELECT CAST(count(*) AS BIGINT) AS n_all,
@@ -8134,10 +8112,10 @@ object SparkEntry {
     // x271: 2x2 factorial — hash bits 0/1 as treatments, exact (n,k)
     // cells, main effects and interaction from the cell rates
     "x271_factorial" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
                END) AS BIGINT) AS conv,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+             $userMd5Hex
                ::BIGINT AS h
            FROM events GROUP BY 1),
          ab AS (SELECT conv, h % 2 AS a, (h // 2) % 2 AS b FROM pu),
@@ -8307,7 +8285,7 @@ object SparkEntry {
     // HALF-UP to the 1e6 microgrid via exact HUGEINT floor division
     // (floor((2*a*1e6 + b) / (2*b))), summed as exact integers
     "x241_logrank" ->
-      """WITH pu AS (SELECT user_id, min(ts) AS start,
+      s"""WITH pu AS (SELECT user_id, min(ts) AS start,
              min(CASE WHEN event_type = 'purchase' THEN ts END)
                AS conv_ts,
              max(ts) AS last_ts
@@ -8318,7 +8296,7 @@ object SparkEntry {
                ELSE date_diff('day', CAST(start AS DATE),
                  CAST(last_ts AS DATE)) END AS BIGINT) AS t,
              CASE WHEN conv_ts IS NOT NULL THEN 1 ELSE 0 END AS e,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+             $userMd5Hex
                ::BIGINT % 2 AS arm
            FROM pu),
          byt AS (SELECT t, CAST(sum(e) AS BIGINT) AS d_all,
@@ -8372,14 +8350,14 @@ object SparkEntry {
     // as the Spark plan; LATE NULL at zero first stage, F NULL at zero
     // uptake variance
     "x242_iv_wald" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
                AS tr,
              sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                AS y
            FROM events GROUP BY 1),
          pa AS (SELECT
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+             $userMd5Hex
                ::BIGINT % 2 AS arm,
              CAST(count(*) AS BIGINT) AS n, CAST(sum(tr) AS BIGINT)
                AS kt,
@@ -8413,12 +8391,12 @@ object SparkEntry {
     // x243: Wilson intervals — z and z^2 forced through DOUBLE (the
     // DECIMAL-literal hazard), same operation order as the Spark plan
     "x243_wilson_ci" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                AS conv
            FROM events GROUP BY 1),
          pa AS (SELECT
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+             $userMd5Hex
                ::BIGINT % 2 AS arm,
              CAST(count(*) AS BIGINT) AS n, CAST(sum(conv) AS BIGINT)
                AS k
@@ -8442,13 +8420,13 @@ object SparkEntry {
     // x225: Mantel-Haenszel 2x2 strata — per-stratum terms rounded then
     // DECIMAL-summed; pooled OR NULL at zero discordant mass
     "x225_mantel_haenszel" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
                THEN 1 ELSE 0 END) AS BIGINT) AS c_pre,
              CAST(max(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
                  AND event_type = 'purchase' THEN 1 ELSE 0 END)
                AS BIGINT) AS conv,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          cells AS (SELECT least(c_pre // 8, 6) AS stratum,
@@ -8551,11 +8529,11 @@ object SparkEntry {
     // x213: exact integer per-user covariate moments into one SMD
     // expression per row; smd pinned NULL at zero pooled variance
     "x213_covariate_balance" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              CAST(count(*) AS BIGINT) AS n_events,
              CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days,
              CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          ag AS (SELECT
@@ -8683,11 +8661,9 @@ object SparkEntry {
     // x212: daily integer arm totals, cumulative moments, the mixture LR
     // and its always-valid p; lambda pinned NULL at zero variance
     "x212_msprt" ->
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS day,
-             CAST(sum(CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-               1, 15))::BIGINT % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-             CAST(sum(CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-               1, 15))::BIGINT % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0
+      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS day,
+             CAST(sum(CASE WHEN $userMd5Hex::BIGINT % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+             CAST(sum(CASE WHEN $userMd5Hex::BIGINT % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0
            FROM events GROUP BY 1),
          cum AS (SELECT day, c1, c0,
              CAST(count(*) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
@@ -8721,17 +8697,8 @@ object SparkEntry {
     // x207: x67's pair CTEs + doubled adjacency; wedge join for common
     // neighbors; jaccard divides exact BIGINTs
     "x207_neighborhood_jaccard" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b
-                   FROM inter JOIN sz sa ON id_a = sa.doc_id
-                              JOIN sz sb ON id_b = sb.doc_id
-                   WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+      s"""WITH $shingleOverlap,
+         ${jaccardPairs("pairs")},
          adj AS (SELECT id_a AS a, id_b AS b FROM pairs
                  UNION ALL SELECT id_b, id_a FROM pairs),
          deg AS (SELECT a AS id, CAST(count(*) AS BIGINT) AS deg
@@ -8754,9 +8721,8 @@ object SparkEntry {
     // x208: per-(label, dim, side) means, then dims-sized cosine folds;
     // the drifted flag compares the ROUNDED cosine on both sides
     "x208_centroid_drift" ->
-      """WITH e AS (SELECT label, (vec_id % 2 = 1) AS is_new,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT label, (vec_id % 2 = 1) AS is_new,
+             $embeddingsAsDouble),
          d AS (SELECT label, i.i AS dim,
              CAST(sum(CASE WHEN NOT is_new THEN 1 ELSE 0 END) AS BIGINT)
                AS n_old_d,
@@ -8783,17 +8749,8 @@ object SparkEntry {
     // x204: x67's pair/tri CTEs + a degree CTE; coefficient divides
     // exact BIGINTs
     "x204_clustering_coeff" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b
-                   FROM inter JOIN sz sa ON id_a = sa.doc_id
-                              JOIN sz sb ON id_b = sb.doc_id
-                   WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+      s"""WITH $shingleOverlap,
+         ${jaccardPairs("pairs")},
          deg AS (SELECT id, CAST(count(*) AS BIGINT) AS degree FROM
                  (SELECT id_a AS id FROM pairs
                   UNION ALL SELECT id_b FROM pairs) GROUP BY id),
@@ -8910,13 +8867,13 @@ object SparkEntry {
          FROM joined ORDER BY value_rank""",
 
     "e10_experiment_readout" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
                THEN value ELSE 0.0 END) AS x,
              sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
                THEN value ELSE 0.0 END) AS y,
              CAST(count(*) AS BIGINT) AS m,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          po AS (SELECT CAST(count(*) AS BIGINT) AS n_all, sum(x) AS sx,
@@ -8973,11 +8930,9 @@ object SparkEntry {
            FROM mv),
          su AS (SELECT DISTINCT event_type AS segment, user_id FROM events),
          sa AS (SELECT segment,
-             CAST(sum(CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-               1, 15))::BIGINT % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             CAST(sum(CASE WHEN $userMd5Hex::BIGINT % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_arm0,
-             CAST(sum(CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-               1, 15))::BIGINT % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+             CAST(sum(CASE WHEN $userMd5Hex::BIGINT % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_arm1
            FROM su GROUP BY 1),
          sc AS (SELECT max(round((CAST(n_arm0 AS DOUBLE)
@@ -9024,9 +8979,8 @@ object SparkEntry {
     // x200: x81's scored CTE into the min-max isotonic closed form —
     // pooled rates divide exact integer cumulative sums
     "x200_isotonic_fit" ->
-      """WITH scored AS (SELECT
-             round(least(CAST(len(list_filter(string_split(lower(text), ' '),
-               w -> w IN ('the','a','of','and','to','in','is','it','for','on')))
+      s"""WITH scored AS (SELECT
+             round(least(CAST(${stopwordHits("text", "en")}
                  AS DOUBLE)
                / CAST(greatest(len(string_split(lower(text), ' ')), 1) AS DOUBLE)
                * 5.0, 1.0), 6) AS p,
@@ -9057,8 +9011,8 @@ object SparkEntry {
     // x201: midrank U from the distinct-count-value frame; tie-corrected
     // normal z; all moments from exact integers
     "x201_mann_whitney" ->
-      """WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+      s"""WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          bv AS (SELECT m, CAST(count(*) AS BIGINT) AS t,
@@ -9092,14 +9046,12 @@ object SparkEntry {
     // x202: chi-square for the 50/50 split collapses to (n0-n1)^2/n;
     // the flag compares the ROUNDED statistic on both sides
     "x202_srm_check" ->
-      """WITH u AS (SELECT DISTINCT event_type AS segment, user_id
+      s"""WITH u AS (SELECT DISTINCT event_type AS segment, user_id
                     FROM events),
          a AS (SELECT segment,
-             CAST(sum(CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-               1, 15))::BIGINT % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             CAST(sum(CASE WHEN $userMd5Hex::BIGINT % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_arm0,
-             CAST(sum(CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-               1, 15))::BIGINT % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+             CAST(sum(CASE WHEN $userMd5Hex::BIGINT % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_arm1
            FROM u GROUP BY 1),
          c AS (SELECT segment, n_arm0, n_arm1, n_arm0 + n_arm1 AS n_total,
@@ -9114,8 +9066,8 @@ object SparkEntry {
     // x203: type-1 quantiles picked by exact integer rank inequality on
     // the per-arm cumulative value frame
     "x203_quantile_treatment" ->
-      """WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+      s"""WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          bv AS (SELECT arm, m, CAST(count(*) AS BIGINT) AS t
@@ -9142,12 +9094,12 @@ object SparkEntry {
     // x198: CUPED — per-user conditional sums, pooled theta, the same
     // expression tree on both sides into the round-6 convention
     "x198_cuped" ->
-      """WITH pu AS (SELECT user_id,
+      s"""WITH pu AS (SELECT user_id,
              sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
                THEN value ELSE 0.0 END) AS x,
              sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
                THEN value ELSE 0.0 END) AS y,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+             $userMd5Hex::BIGINT
                % 2 AS arm
            FROM events GROUP BY user_id),
          po AS (SELECT CAST(count(*) AS BIGINT) AS n_all, sum(x) AS sx,
@@ -9237,9 +9189,8 @@ object SparkEntry {
     // engine-portable floor(+0.5) half-up, asymmetric cosine ranking
     // replayed with the x99 fold conventions
     "x177_sq8_recall" ->
-      """WITH e2 AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e2 AS (SELECT vec_id,
+             $embeddingsAsDouble),
          p AS (SELECT min(list_aggregate(v, 'min')) AS vmin,
              max(list_aggregate(v, 'max')) AS vmax FROM e2),
          sc AS (SELECT vmin, (vmax - vmin) / 255.0 AS s FROM p),
@@ -9269,9 +9220,8 @@ object SparkEntry {
     // x180: x177's SQ8 ranking cut at 100, exact cosines re-ranked over
     // the cut, recall of the re-ranked top-20 vs exact search
     "x180_sq8_rerank" ->
-      """WITH e2 AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e2 AS (SELECT vec_id,
+             $embeddingsAsDouble),
          p AS (SELECT min(list_aggregate(v, 'min')) AS vmin,
              max(list_aggregate(v, 'max')) AS vmax FROM e2),
          sc AS (SELECT vmin, (vmax - vmin) / 255.0 AS s FROM p),
@@ -9303,9 +9253,8 @@ object SparkEntry {
     // x178: prefix-sliced cosine rankings vs the full vector, one row
     // per width; DuckDB's v[1:d] == Spark's slice(v, 1, d)
     "x178_matryoshka_recall" ->
-      """WITH e2 AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e2 AS (SELECT vec_id,
+             $embeddingsAsDouble),
          q AS (SELECT v FROM e2 WHERE vec_id = 0),
          se AS (SELECT c.vec_id AS neighbor_id,
              list_sum(list_transform(range(1, 65), i -> q.v[i] * c.v[i]))
@@ -9341,9 +9290,8 @@ object SparkEntry {
     // left-to-right folds; rows identical to the query (d2o = 0)
     // excluded by both engines
     "x179_jl_distortion" ->
-      """WITH e2 AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e2 AS (SELECT vec_id,
+             $embeddingsAsDouble),
          sm AS (SELECT j, list(CASE WHEN substr(md5('jl|' || j || '|' || i), 1, 1)
                  IN ('0','1','2','3','4','5','6','7')
                THEN 1.0 ELSE -1.0 END ORDER BY i) AS s
@@ -9411,9 +9359,8 @@ object SparkEntry {
     // distance to the chosen set (same sequential-order fold) and takes
     // (d desc, id asc); emitted d is the selection-time coverage radius²
     "x166_kcenter" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
          c1 AS (SELECT vec_id, v FROM e ORDER BY vec_id ASC LIMIT 1),
          d1 AS (SELECT e.vec_id, e.v,
              list_sum(list_transform(range(1, 65),
@@ -9605,11 +9552,8 @@ object SparkEntry {
     // the x8 quality formula -> DECIMAL(18,6) sums -> the same
     // fixed-order r formula; double-via-string hops per the convention
     "x128_quality_length_corr" ->
-      """WITH h AS (SELECT n_chars, text,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on',
-                        'der','die','das','und','ist','ein','zu','mit','auf','nicht',
-                        'le','la','les','et','est','un','une','dans','pour','que'))) AS sw
+      s"""WITH h AS (SELECT n_chars, text,
+           ${stopwordHits("text", "en", "de", "fr")} AS sw
          FROM documents),
          q AS (SELECT
              CAST(round((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0, 1.0) * 0.5
@@ -9717,7 +9661,7 @@ object SparkEntry {
 
     // TPC-H Q3/Q5/Q10 shapes: top-k selection ordered by the EXACT
     // decimal revenue (identical in both engines), output re-typed
-    // double-via-string per the q1 convention
+    // double-via-string per the OUTPUT typing convention
     "q3_shipping_priority" ->
       """WITH rev AS (
            SELECT l_orderkey, o_orderdate, o_orderpriority,
@@ -10146,31 +10090,9 @@ object SparkEntry {
            min(doc_id) AS keeper, count(*) AS n_copies
          FROM documents GROUP BY 1 ORDER BY fp""",
 
-    "x2_dedup_ngram_jaccard" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-         SELECT id_a, id_b, CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-         FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-         WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8
-         ORDER BY id_a, id_b""",
+    "x2_dedup_ngram_jaccard" -> ngramJaccardOracle,
 
-    "x3_dedup_minhash_lsh" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-         SELECT id_a, id_b, CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-         FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-         WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8
-         ORDER BY id_a, id_b""",
+    "x3_dedup_minhash_lsh" -> ngramJaccardOracle,
 
     "x82_negative_pairs" ->
       """WITH n AS (SELECT count(*) AS n FROM documents),
@@ -10184,17 +10106,8 @@ object SparkEntry {
          WHERE negative <> anchor ORDER BY anchor, i""",
 
     "x83_label_propagation" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         p AS (SELECT id_a, id_b
-               FROM inter JOIN sz sa ON id_a = sa.doc_id
-                 JOIN sz sb ON id_b = sb.doc_id
-               WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+      s"""WITH $shingleOverlap,
+         ${jaccardPairs("p")},
          sym AS (SELECT id_a AS a, id_b AS b FROM p
                  UNION SELECT id_b, id_a FROM p),
          nl AS (SELECT a, d.lang AS nl FROM sym JOIN documents d ON b = doc_id),
@@ -10227,8 +10140,7 @@ object SparkEntry {
          FROM cand WHERE bit_count(xor(sa, sb)) <= 3 ORDER BY id_a, id_b""",
 
     "x5_dedup_embed_cosine" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings)
+      s"""WITH e AS (SELECT vec_id, $embeddingsAsDouble)
          SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
              / (sqrt(list_sum(list_transform(range(1, 65), i -> a.v[i] * a.v[i])))
@@ -10237,8 +10149,7 @@ object SparkEntry {
          ORDER BY id_a, id_b""",
 
     "x6_ann_topk" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, $embeddingsAsDouble),
          s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              list_sum(list_transform(range(1, 65), i -> q.v[i] * c.v[i]))
                / (sqrt(list_sum(list_transform(range(1, 65), i -> q.v[i] * q.v[i])))
@@ -10251,13 +10162,10 @@ object SparkEntry {
          WHERE rank <= 10 ORDER BY query_id, rank""",
 
     "x7_lang_id" ->
-      """WITH h AS (SELECT doc_id,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on'))) AS en,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('der','die','das','und','ist','ein','zu','mit','auf','nicht'))) AS de,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('le','la','les','et','est','un','une','dans','pour','que'))) AS fr
+      s"""WITH h AS (SELECT doc_id,
+           ${stopwordHits("text", "en")} AS en,
+           ${stopwordHits("text", "de")} AS de,
+           ${stopwordHits("text", "fr")} AS fr
          FROM documents)
          SELECT doc_id,
            CASE WHEN greatest(en, de, fr) = 0 THEN 'und'
@@ -10267,16 +10175,13 @@ object SparkEntry {
          FROM h ORDER BY doc_id""",
 
     "x8_quality_score" ->
-      """WITH q AS (SELECT doc_id,
+      s"""WITH q AS (SELECT doc_id,
            len(string_split(text, ' ')) AS n_tokens,
            CASE WHEN length(text) = 0 THEN 0.0
                 ELSE CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
                      / length(text) END AS punct_ratio,
            CASE WHEN len(string_split(lower(text), ' ')) = 0 THEN 0.0
-                ELSE CAST(len(list_filter(string_split(lower(text), ' '),
-                       w -> w IN ('the','a','of','and','to','in','is','it','for','on',
-                                  'der','die','das','und','ist','ein','zu','mit','auf','nicht',
-                                  'le','la','les','et','est','un','une','dans','pour','que'))) AS DOUBLE)
+                ELSE CAST(${stopwordHits("text", "en", "de", "fr")} AS DOUBLE)
                      / len(string_split(lower(text), ' ')) END AS sw_ratio
          FROM documents)
          SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
@@ -10315,11 +10220,7 @@ object SparkEntry {
            ON e.user_id = o.o_custkey AND o.o_orderdate <= CAST(e.ts AS TIMESTAMP)
          ORDER BY e.event_id""",
 
-    "x13_percentiles" ->
-      """SELECT quantile_cont(o_totalprice, 0.5) AS p50,
-           quantile_cont(o_totalprice, 0.9) AS p90,
-           quantile_cont(o_totalprice, 0.99) AS p99
-         FROM orders""",
+    "x13_percentiles" -> percentilesOracle,
 
     "x14_profile" ->
       """WITH t AS (SELECT c_custkey, c_name, c_nationkey, c_mktsegment FROM customer)
@@ -10374,29 +10275,19 @@ object SparkEntry {
          FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
          GROUP BY s_name ORDER BY s_name""",
 
-    "x16_percentiles_sorted" ->
-      """SELECT quantile_cont(o_totalprice, 0.5) AS p50,
-           quantile_cont(o_totalprice, 0.9) AS p90,
-           quantile_cont(o_totalprice, 0.99) AS p99
-         FROM orders""",
+    "x16_percentiles_sorted" -> percentilesOracle,
 
     "e1_curation_pipeline" ->
-      """WITH m0 AS (SELECT doc_id, text,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on'))) AS en,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('der','die','das','und','ist','ein','zu','mit','auf','nicht'))) AS de,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('le','la','les','et','est','un','une','dans','pour','que'))) AS fr,
+      raw"""WITH m0 AS (SELECT doc_id, text,
+           ${stopwordHits("text", "en")} AS en,
+           ${stopwordHits("text", "de")} AS de,
+           ${stopwordHits("text", "fr")} AS fr,
            len(string_split(text, ' ')) AS n_tokens,
            CASE WHEN length(text) = 0 THEN 0.0
                 ELSE CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
                      / length(text) END AS punct_ratio,
            CASE WHEN len(string_split(lower(text), ' ')) = 0 THEN 0.0
-                ELSE CAST(len(list_filter(string_split(lower(text), ' '),
-                       w -> w IN ('the','a','of','and','to','in','is','it','for','on',
-                                  'der','die','das','und','ist','ein','zu','mit','auf','nicht',
-                                  'le','la','les','et','est','un','une','dans','pour','que'))) AS DOUBLE)
+                ELSE CAST(${stopwordHits("text", "en", "de", "fr")} AS DOUBLE)
                      / len(string_split(lower(text), ' ')) END AS sw_ratio
            FROM documents),
          metrics AS (SELECT doc_id, text,
@@ -10424,8 +10315,7 @@ object SparkEntry {
                    FROM sh a JOIN sh b USING (s)
                    WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
          losers AS (SELECT DISTINCT id_b
-           FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-           WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8)
+           ${jaccardAtLeast(0.8)})
          SELECT doc_id, lang_pred, n_tokens, quality FROM kept2
          WHERE doc_id NOT IN (SELECT id_b FROM losers)
          ORDER BY doc_id""",
@@ -10456,9 +10346,7 @@ object SparkEntry {
          FROM d ORDER BY doc_id""",
 
     "x20_decontaminate" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
+      s"""WITH $docShingles,
          bench AS (SELECT DISTINCT s FROM sh WHERE doc_id < 10)
          SELECT doc_id, count(*) AS n_overlap
          FROM sh JOIN bench USING (s)
@@ -10601,18 +10489,7 @@ object SparkEntry {
 
     // same oracle as x2: the Spark side runs the prefix-filtered plan,
     // the oracle replays the naive rule — the gate proves identity
-    "x36_dedup_jaccard_prefix" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-         SELECT id_a, id_b, CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-         FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-         WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8
-         ORDER BY id_a, id_b""",
+    "x36_dedup_jaccard_prefix" -> ngramJaccardOracle,
 
     "x31_distinct_users" ->
       """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
@@ -10639,9 +10516,8 @@ object SparkEntry {
          ORDER BY doc_id""",
 
     "x34_nearest_centroid" ->
-      """WITH e AS (SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, label,
+             $embeddingsAsDouble),
          c AS (SELECT e.label AS cl, e.v AS cv
            FROM e JOIN (SELECT label, min(vec_id) AS mv
                         FROM embeddings GROUP BY label) m
@@ -10691,23 +10567,10 @@ object SparkEntry {
          FROM documents d LEFT JOIN agg a USING(doc_id) ORDER BY doc_id""",
 
     "x39_dedup_components" ->
-      """WITH RECURSIVE
-         w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b
-                   FROM inter JOIN sz sa ON id_a = sa.doc_id
-                              JOIN sz sb ON id_b = sb.doc_id
-                   WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
-         edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                   UNION SELECT id_b, id_a FROM pairs),
-         reach(a, b) AS (SELECT u, v FROM edges
-                         UNION
-                         SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u)
+      s"""WITH RECURSIVE
+         $shingleOverlap,
+         ${jaccardPairs("pairs")},
+         ${closure("pairs")}
          SELECT a AS id, least(min(b), a) AS component
          FROM reach GROUP BY a ORDER BY id""",
 
@@ -10748,23 +10611,10 @@ object SparkEntry {
          ORDER BY id_a, id_b""",
 
     "x69_canonical_per_cluster" ->
-      """WITH RECURSIVE
-         w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b
-                   FROM inter JOIN sz sa ON id_a = sa.doc_id
-                              JOIN sz sb ON id_b = sb.doc_id
-                   WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
-         edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                   UNION SELECT id_b, id_a FROM pairs),
-         reach(a, b) AS (SELECT u, v FROM edges
-                         UNION
-                         SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u),
+      s"""WITH RECURSIVE
+         $shingleOverlap,
+         ${jaccardPairs("pairs")},
+         ${closure("pairs")},
          lab AS (SELECT a AS id, least(min(b), a) AS component
                  FROM reach GROUP BY a),
          m AS (SELECT d.doc_id, coalesce(l.component, d.doc_id) AS cluster,
@@ -10779,23 +10629,10 @@ object SparkEntry {
          FROM r WHERE rn = 1 ORDER BY cluster""",
 
     "x70_cluster_size_dist" ->
-      """WITH RECURSIVE
-         w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b
-                   FROM inter JOIN sz sa ON id_a = sa.doc_id
-                              JOIN sz sb ON id_b = sb.doc_id
-                   WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
-         edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                   UNION SELECT id_b, id_a FROM pairs),
-         reach(a, b) AS (SELECT u, v FROM edges
-                         UNION
-                         SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u),
+      s"""WITH RECURSIVE
+         $shingleOverlap,
+         ${jaccardPairs("pairs")},
+         ${closure("pairs")},
          lab AS (SELECT a AS id, least(min(b), a) AS component
                  FROM reach GROUP BY a),
          cs AS (SELECT component, count(*) AS cluster_size
@@ -10869,9 +10706,9 @@ object SparkEntry {
          FROM r WHERE rk <= 3 ORDER BY doc_id, rk""",
 
     "x78_hll_distinct" ->
-      """WITH hu AS (
+      s"""WITH hu AS (
            SELECT event_type,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
+             $userMd5Hex::BIGINT AS h
            FROM events),
          he AS (
            SELECT event_type,
@@ -10999,13 +10836,10 @@ object SparkEntry {
          FROM orders, cuts""",
 
     "e6_pretrain_mix" ->
-      """WITH q AS (SELECT doc_id, source, n_chars,
+      s"""WITH q AS (SELECT doc_id, source, n_chars,
            round((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0, 1.0) * 0.5
                   + least(CASE WHEN len(string_split(lower(text), ' ')) = 0 THEN 0.0
-                       ELSE CAST(len(list_filter(string_split(lower(text), ' '),
-                              w -> w IN ('the','a','of','and','to','in','is','it','for','on',
-                                         'der','die','das','und','ist','ein','zu','mit','auf','nicht',
-                                         'le','la','les','et','est','un','une','dans','pour','que'))) AS DOUBLE)
+                       ELSE CAST(${stopwordHits("text", "en", "de", "fr")} AS DOUBLE)
                             / len(string_split(lower(text), ' ')) END * 5.0, 1.0) * 0.3)
                  * (1.0 - least((CASE WHEN length(text) = 0 THEN 0.0
                       ELSE CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
@@ -11060,7 +10894,7 @@ object SparkEntry {
     // replay restricted to query vec 0 (k=20); fusion adds the two
     // reciprocal terms in the same fixed order and rounds to 6
     "x95_rrf_fusion" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
+      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
          st AS (SELECT count(*) AS n,
                   avg(CAST(len(ts) AS DOUBLE)) AS avgdl FROM toks),
          d1 AS (SELECT count(*) AS df FROM toks WHERE list_contains(ts, 'dup')),
@@ -11085,8 +10919,7 @@ object SparkEntry {
          lr AS (SELECT doc_id,
              row_number() OVER (ORDER BY score DESC, doc_id ASC) AS lex_rank
            FROM lex),
-         e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
+         e AS (SELECT vec_id, $embeddingsAsDouble),
          sem0 AS (SELECT c.vec_id AS doc_id,
              list_sum(list_transform(range(1, 65), i -> q.v[i] * c.v[i]))
                / (sqrt(list_sum(list_transform(range(1, 65), i -> q.v[i] * q.v[i])))
@@ -11109,13 +10942,7 @@ object SparkEntry {
          WHERE rrf_rank <= 15 ORDER BY rrf_rank""",
 
     "x96_containment" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
+      s"""WITH $shingleOverlap
          SELECT id_a, id_b,
            CAST(c AS DOUBLE) / least(sa.n, sb.n) AS containment
          FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
@@ -11136,18 +10963,10 @@ object SparkEntry {
     // x2's pair rule at threshold 0.5, then the md5-stable band-keyed
     // rank; floor(jaccard*10) clamps 1.0 into the top band on both sides
     "x122_pair_audit" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
+      s"""WITH $shingleOverlap,
          p AS (SELECT id_a, id_b,
                  CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-               FROM inter JOIN sz sa ON id_a = sa.doc_id
-                 JOIN sz sb ON id_b = sb.doc_id
-               WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5),
+               ${jaccardAtLeast(0.5)}),
          q AS (SELECT least(CAST(floor(jaccard * 10) AS BIGINT), 9) AS band,
                  ('0x' || substr(md5(CAST(id_a AS VARCHAR) || '#'
                    || CAST(id_b AS VARCHAR)), 1, 15))::BIGINT AS k,
@@ -11407,13 +11226,10 @@ object SparkEntry {
     // x8 quality formula (rounded-6 -> exact DECIMAL(18,6) sum), and the
     // x13 percentile pair, into one datasheet row
     "e7_corpus_report" ->
-      """WITH h AS (SELECT source, n_chars, text,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on'))) AS en,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('der','die','das','und','ist','ein','zu','mit','auf','nicht'))) AS de,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('le','la','les','et','est','un','une','dans','pour','que'))) AS fr
+      raw"""WITH h AS (SELECT source, n_chars, text,
+           ${stopwordHits("text", "en")} AS en,
+           ${stopwordHits("text", "de")} AS de,
+           ${stopwordHits("text", "fr")} AS fr
          FROM documents),
          b AS (SELECT source, n_chars,
              md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
@@ -11476,24 +11292,18 @@ object SparkEntry {
          FROM sc ORDER BY doc_id""",
 
     "x110_code_switch" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          f AS (SELECT doc_id,
              array_to_string(ws[1:len(ws) // 2], ' ') AS h1,
              array_to_string(ws[len(ws) // 2 + 1:len(ws)], ' ') AS h2
            FROM w WHERE len(ws) >= 4),
          s AS (SELECT doc_id,
-           len(list_filter(string_split(lower(h1), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on'))) AS en1,
-           len(list_filter(string_split(lower(h1), ' '),
-             w -> w IN ('der','die','das','und','ist','ein','zu','mit','auf','nicht'))) AS de1,
-           len(list_filter(string_split(lower(h1), ' '),
-             w -> w IN ('le','la','les','et','est','un','une','dans','pour','que'))) AS fr1,
-           len(list_filter(string_split(lower(h2), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on'))) AS en2,
-           len(list_filter(string_split(lower(h2), ' '),
-             w -> w IN ('der','die','das','und','ist','ein','zu','mit','auf','nicht'))) AS de2,
-           len(list_filter(string_split(lower(h2), ' '),
-             w -> w IN ('le','la','les','et','est','un','une','dans','pour','que'))) AS fr2
+           ${stopwordHits("h1", "en")} AS en1,
+           ${stopwordHits("h1", "de")} AS de1,
+           ${stopwordHits("h1", "fr")} AS fr1,
+           ${stopwordHits("h2", "en")} AS en2,
+           ${stopwordHits("h2", "de")} AS de2,
+           ${stopwordHits("h2", "fr")} AS fr2
            FROM f),
          l AS (SELECT doc_id,
              CASE WHEN greatest(en1, de1, fr1) = 0 THEN 'und'
@@ -11513,9 +11323,8 @@ object SparkEntry {
     // the x92 scored CTE + cumulative counts over the threshold-desc
     // group frame; "prec" not "precision" (SQL type keyword)
     "x106_pr_curve" ->
-      """WITH scored AS (SELECT
-             round(least(CAST(len(list_filter(string_split(lower(text), ' '),
-               w -> w IN ('the','a','of','and','to','in','is','it','for','on')))
+      s"""WITH scored AS (SELECT
+             round(least(CAST(${stopwordHits("text", "en")}
                  AS DOUBLE)
                / CAST(greatest(len(string_split(lower(text), ' ')), 1) AS DOUBLE)
                * 5.0, 1.0), 6) AS p,
@@ -11546,9 +11355,7 @@ object SparkEntry {
          FROM f GROUP BY 1 ORDER BY source""",
 
     "x108_novelty" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
+      s"""WITH $docShingles,
          dfq AS (SELECT s, count(*) AS dfq FROM sh GROUP BY 1)
          SELECT doc_id, count(*) AS n_shingles,
            CAST(sum(CASE WHEN dfq = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
@@ -11586,20 +11393,9 @@ object SparkEntry {
     // Certifies the pruned candidate set AND the per-pair math
     // cross-engine (not just "IVF happened to agree with brute")
     "x156_hard_negatives_ivf" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         bscore AS (SELECT e.vec_id, t.ci,
-             list_sum(list_transform(range(1, 65), i ->
-               CASE WHEN (('0x' || substr(md5(CAST(t.ci AS VARCHAR) || ',' ||
-                   CAST(i - 1 AS VARCHAR)), 1, 15))::BIGINT % 2) = 0
-                 THEN 1.0 ELSE -1.0 END
-               * coalesce(e.v[i], 0.0))) AS score
-           FROM e, UNNEST(range(0, 16)) t(ci)),
-         bucket AS (SELECT vec_id, ci AS bucket FROM (
-             SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-               ORDER BY score DESC, ci ASC) AS rn FROM bscore)
-           WHERE rn = 1),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
+         $ivfBuckets,
          probes AS (SELECT vec_id AS query_id, ci AS bucket FROM (
              SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
                ORDER BY score DESC, ci DESC) AS rn
@@ -11650,9 +11446,8 @@ object SparkEntry {
     // the x159 diversity identity, replayed: per-dimension power sums,
     // sum_{i<j}||xi-xj||^2 = n*sum||xi||^2 - sum_d (sum_i x_id)^2
     "x159_sample_diversity" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings WHERE vec_id % 10 = 0),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble WHERE vec_id % 10 = 0),
          x AS (SELECT t.i AS d, coalesce(e.v[t.i], 0.0) AS val
                FROM e, UNNEST(range(1, 65)) t(i)),
          pd AS (SELECT d, sum(val * val) AS ss_d, sum(val) AS s_d
@@ -11668,13 +11463,7 @@ object SparkEntry {
     // the x160 sweep: x2's inverted-index pair machinery aggregated by
     // integer band (20*c) // union instead of filtered at one threshold
     "x160_threshold_sweep" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
+      s"""WITH $shingleOverlap,
          bands AS (SELECT (20 * c) // (sa.n + sb.n - c) AS band
                    FROM inter JOIN sz sa ON id_a = sa.doc_id
                      JOIN sz sb ON id_b = sb.doc_id)
@@ -11686,20 +11475,9 @@ object SparkEntry {
     // before = standing predicate, after = everything (the upsert must
     // be row-identical to the rebuild), hot = integer twice-the-mean
     "e9_vector_maintenance" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         bscore AS (SELECT e.vec_id, t.ci,
-             list_sum(list_transform(range(1, 65), i ->
-               CASE WHEN (('0x' || substr(md5(CAST(t.ci AS VARCHAR) || ',' ||
-                   CAST(i - 1 AS VARCHAR)), 1, 15))::BIGINT % 2) = 0
-                 THEN 1.0 ELSE -1.0 END
-               * coalesce(e.v[i], 0.0))) AS score
-           FROM e, UNNEST(range(0, 16)) t(ci)),
-         bucket AS (SELECT vec_id, ci AS bucket FROM (
-             SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-               ORDER BY score DESC, ci ASC) AS rn FROM bscore)
-           WHERE rn = 1),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
+         $ivfBuckets,
          g AS (SELECT bucket, count(*) AS n_after,
              CAST(sum(CASE WHEN vec_id % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_before,
@@ -11715,20 +11493,9 @@ object SparkEntry {
     // over the union corpus — the x63 bucket CTE over ALL vectors, with
     // the incoming-batch predicate deciding is_new
     "x161_ivf_index_upsert" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         bscore AS (SELECT e.vec_id, t.ci,
-             list_sum(list_transform(range(1, 65), i ->
-               CASE WHEN (('0x' || substr(md5(CAST(t.ci AS VARCHAR) || ',' ||
-                   CAST(i - 1 AS VARCHAR)), 1, 15))::BIGINT % 2) = 0
-                 THEN 1.0 ELSE -1.0 END
-               * coalesce(e.v[i], 0.0))) AS score
-           FROM e, UNNEST(range(0, 16)) t(ci)),
-         bucket AS (SELECT vec_id, ci AS bucket FROM (
-             SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-               ORDER BY score DESC, ci ASC) AS rn FROM bscore)
-           WHERE rn = 1)
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
+         $ivfBuckets
          SELECT bucket, count(*) AS n,
            CAST(sum(CASE WHEN vec_id % 10 = 0 OR vec_id < 50
              THEN 1 ELSE 0 END) AS BIGINT) AS n_new
@@ -11804,8 +11571,8 @@ object SparkEntry {
     // x78's register/rho/estimate replay over a generated dense
     // (bucket x register) scaffold with a range-frame rolling max
     "x103_rolling_distinct" ->
-      """WITH h AS (SELECT epoch_us(ts) // 86400000000 AS bk,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
+      s"""WITH h AS (SELECT epoch_us(ts) // 86400000000 AS bk,
+             $userMd5Hex::BIGINT AS h
            FROM events),
          c AS (SELECT bk, h % 256 AS j,
              max(53 - length(ltrim(bin(h // 256), '0'))) AS m
@@ -11852,8 +11619,7 @@ object SparkEntry {
     "x99_ann_recall" ->
       s"""WITH a AS (SELECT vec_id AS neighbor_id FROM ($ivfAdcOracle)),
          e2 AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+             $embeddingsAsDouble),
          s0 AS (SELECT c.vec_id AS neighbor_id,
              list_sum(list_transform(range(1, 65), i -> q.v[i] * c.v[i]))
                / (sqrt(list_sum(list_transform(range(1, 65), i -> q.v[i] * q.v[i])))
@@ -11882,13 +11648,10 @@ object SparkEntry {
          FROM a WHERE n_gaps >= 3 ORDER BY user_id""",
 
     "x93_kappa" ->
-      """WITH h AS (SELECT lang,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on'))) AS en,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('der','die','das','und','ist','ein','zu','mit','auf','nicht'))) AS de,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('le','la','les','et','est','un','une','dans','pour','que'))) AS fr
+      s"""WITH h AS (SELECT lang,
+           ${stopwordHits("text", "en")} AS en,
+           ${stopwordHits("text", "de")} AS de,
+           ${stopwordHits("text", "fr")} AS fr
          FROM documents),
          p AS (SELECT lang AS a,
            CASE WHEN greatest(en, de, fr) = 0 THEN 'und'
@@ -11910,9 +11673,8 @@ object SparkEntry {
          FROM m, s""",
 
     "x92_auc" ->
-      """WITH scored AS (SELECT
-             round(least(CAST(len(list_filter(string_split(lower(text), ' '),
-               w -> w IN ('the','a','of','and','to','in','is','it','for','on')))
+      s"""WITH scored AS (SELECT
+             round(least(CAST(${stopwordHits("text", "en")}
                  AS DOUBLE)
                / CAST(greatest(len(string_split(lower(text), ' ')), 1) AS DOUBLE)
                * 5.0, 1.0), 6) AS p,
@@ -12013,13 +11775,10 @@ object SparkEntry {
          ORDER BY out_rows DESC, key ASC LIMIT 10""",
 
     "x80_langid_confusion" ->
-      """WITH h AS (SELECT lang,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('the','a','of','and','to','in','is','it','for','on'))) AS en,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('der','die','das','und','ist','ein','zu','mit','auf','nicht'))) AS de,
-           len(list_filter(string_split(lower(text), ' '),
-             w -> w IN ('le','la','les','et','est','un','une','dans','pour','que'))) AS fr
+      s"""WITH h AS (SELECT lang,
+           ${stopwordHits("text", "en")} AS en,
+           ${stopwordHits("text", "de")} AS de,
+           ${stopwordHits("text", "fr")} AS fr
          FROM documents),
          p AS (SELECT lang AS actual,
            CASE WHEN greatest(en, de, fr) = 0 THEN 'und'
@@ -12034,9 +11793,8 @@ object SparkEntry {
          FROM c ORDER BY actual, predicted""",
 
     "x81_score_calibration" ->
-      """WITH scored AS (SELECT
-             round(least(CAST(len(list_filter(string_split(lower(text), ' '),
-               w -> w IN ('the','a','of','and','to','in','is','it','for','on')))
+      s"""WITH scored AS (SELECT
+             round(least(CAST(${stopwordHits("text", "en")}
                  AS DOUBLE)
                / CAST(greatest(len(string_split(lower(text), ' ')), 1) AS DOUBLE)
                * 5.0, 1.0), 6) AS p,
@@ -12102,17 +11860,14 @@ object SparkEntry {
          FROM g ORDER BY user_id, event_id""",
 
     "x41_neardup_vs_history" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
+      s"""WITH $docShingles,
          sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
          inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
                    FROM sh a JOIN sh b USING (s)
                    WHERE a.doc_id % 10 <> 0 AND b.doc_id % 10 = 0
                    GROUP BY 1, 2)
          SELECT id_a, id_b, CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-         FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-         WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8
+         ${jaccardAtLeast(0.8)}
          ORDER BY id_a, id_b""",
 
     "x42_shared_windows" ->
@@ -12124,9 +11879,8 @@ object SparkEntry {
          GROUP BY 1, 2 ORDER BY 1, 2""",
 
     "x43_semdedup" ->
-      """WITH e AS (SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, label,
+             $embeddingsAsDouble),
          c AS (SELECT e.label AS ccl, e.v AS cv
            FROM e JOIN (SELECT label, min(vec_id) AS mv
                         FROM embeddings GROUP BY label) m
@@ -12200,9 +11954,8 @@ object SparkEntry {
     // gate-proven bit-identical to the Spark plan), then per-cluster
     // per-dimension means, rounded to 6 on both sides
     "x46_kmeans_step" ->
-      """WITH e AS (SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, label,
+             $embeddingsAsDouble),
          c AS (SELECT e.label AS cl, e.v AS cv
            FROM e JOIN (SELECT label, min(vec_id) AS mv
                         FROM embeddings GROUP BY label) m
@@ -12246,7 +11999,7 @@ object SparkEntry {
          FROM sc CROSS JOIN q ORDER BY doc_id""",
 
     "x48_gopher_filter" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws,
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws,
              string_split(lower(text), ' ') AS wl FROM documents),
          m AS (SELECT doc_id, len(ws) AS n_tok,
              CASE WHEN len(ws) = 0 THEN 0.0
@@ -12258,9 +12011,7 @@ object SparkEntry {
                           FOR i IN range(1, greatest(len(ws) - 3, 1))])) AS DOUBLE)
                        / CAST(greatest(len(ws) - 4, 1) AS DOUBLE) END AS dup5,
              len(list_filter(wl,
-               x -> x IN ('the','a','of','and','to','in','is','it','for','on',
-                          'der','die','das','und','ist','ein','zu','mit','auf','nicht',
-                          'le','la','les','et','est','un','une','dans','pour','que'))) AS hits
+               x -> x IN (${stopwordList("en", "de", "fr")}))) AS hits
            FROM w)
          SELECT doc_id,
            (n_tok >= 30 AND n_tok <= 80) AS r_len,
@@ -12329,9 +12080,8 @@ object SparkEntry {
     // vectors' sub-slices; squared-L2 via the x34-proven list_sum fold
     // (bit-identical to the Spark expression), ties to the lowest index
     "x51_pq_codes" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
          s AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
                FROM e ORDER BY vec_id LIMIT 16),
          d AS (SELECT e.vec_id, t.j, s.c,
@@ -12350,9 +12100,8 @@ object SparkEntry {
     // vec_id = 0; approx distance = sum of table lookups, rounded to 6
     // BEFORE ranking (the x44 rank-by-rounded convention)
     "x52_pq_search" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
+      s"""WITH e AS (SELECT vec_id,
+             $embeddingsAsDouble),
          s AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
                FROM e ORDER BY vec_id LIMIT 16),
          q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
@@ -12557,23 +12306,10 @@ object SparkEntry {
     // CTE chain) -> group key = component min (singletons = own id) ->
     // the x17 md5 split rule on the GROUP key
     "e5_leakage_safe_split" ->
-      """WITH RECURSIVE
-         w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b
-                   FROM inter JOIN sz sa ON id_a = sa.doc_id
-                              JOIN sz sb ON id_b = sb.doc_id
-                   WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
-         edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-                   UNION SELECT id_b, id_a FROM pairs),
-         reach(a, b) AS (SELECT u, v FROM edges
-                         UNION
-                         SELECT r.a, e.v FROM reach r JOIN edges e ON r.b = e.u),
+      s"""WITH RECURSIVE
+         $shingleOverlap,
+         ${jaccardPairs("pairs")},
+         ${closure("pairs")},
          comp AS (SELECT a AS id, least(min(b), a) AS component
                   FROM reach GROUP BY a),
          g AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_key
@@ -12587,17 +12323,8 @@ object SparkEntry {
     // triangles: naive jaccard pairs (id_a < id_b already — the oriented
     // form), wedge + closure joins, unnest the three corners
     "x67_triangle_counts" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-                FROM w, UNNEST(range(1, greatest(len(ws) - 1, 1))) t(i)),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-                   FROM sh a JOIN sh b USING (s)
-                   WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b
-                   FROM inter JOIN sz sa ON id_a = sa.doc_id
-                              JOIN sz sb ON id_b = sb.doc_id
-                   WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8),
+      s"""WITH $shingleOverlap,
+         ${jaccardPairs("pairs")},
          tri AS (SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
                  FROM pairs e1
                  JOIN pairs e2 ON e1.id_a = e2.id_a AND e1.id_b < e2.id_b
